@@ -160,115 +160,10 @@ object Bench {
   private val DriverScanStageRatio: Map[(String, Int), Double] =
     Map(("sf0.1", 64) -> 0.70)
 
-  /** Shuffle/spill directory for the measurement mains: tmpfs when the
-    * box has one (r16 A/B, PERF.md: the stage-dense family — graph_*,
-    * dedup_clusters*, keep_best — runs 0.69x total with shuffle files
-    * on /dev/shm vs the shared virtio /tmp, per-query 0.52-0.76x, and
-    * the calibration probe's rep spread collapses from 4.49-5.76 s to
-    * 4.27-4.36 s: the disk was both a tax and a noise source). On a
-    * real cluster this is the standard fast-local-storage shuffle-dir
-    * practice; at these bench SFs one query's shuffle is MBs, far under
-    * the tmpfs size. SPARK_LOCAL_DIRS (Spark's own env knob) takes
-    * precedence when set; a box without a writable /dev/shm falls back
-    * to Spark's default. */
-  private[graft] def localDir(): Option[String] = {
-    if (sys.env.contains("SPARK_LOCAL_DIRS")) None
-    else {
-      val root = new java.io.File("/dev/shm/graft-shuffle")
-      if ((root.isDirectory || root.mkdirs()) && root.canWrite) {
-        // Stale shuffle dirs from killed JVMs accumulate in RAM-backed
-        // tmpfs across runs (r16 ADVICE): sweep dead-pid subroots at
-        // startup, then refuse tmpfs if <8 GiB would remain free —
-        // better the slow default dir than an OOM-killing one.
-        sweepStale(root)
-        // Each measurement JVM gets its OWN pid-named subroot (r17
-        // verdict + ADVICE: the previous marker protocol — stamp a pid
-        // file into every unmarked blockmgr-*/spark-* dir after
-        // getOrCreate — had an ownership race where two near-
-        // simultaneous JVMs could claim each other's dirs and a later
-        // sweep would delete a LIVE JVM's shuffle dir mid-run). With a
-        // per-pid subroot there is nothing to claim: liveness is the
-        // dir name itself against /proc, concurrent mains never share
-        // a subtree, and the marker protocol is gone entirely.
-        val mine = new java.io.File(root, ProcessHandle.current().pid().toString)
-        if (root.getUsableSpace >= 8L * 1024 * 1024 * 1024 &&
-            (mine.isDirectory || mine.mkdirs())) {
-          // Best-effort tidy-up: Spark removes its own dirs inside the
-          // subroot on clean shutdown; this drops the (then-empty) pid
-          // dir too. Crashed runs are caught by the next sweepStale.
-          Runtime.getRuntime.addShutdownHook(
-            new Thread(() => deleteRecursively(mine)))
-          Some(mine.getPath)
-        } else None
-      } else None
-    }
-  }
-
-  /** Delete subroots left by measurement JVMs that are no longer alive.
-    * Since r18 each JVM writes under its own pid-named subroot, so
-    * liveness is just /proc/<pid>. Dirs named blockmgr-* or spark-*
-    * directly under the root can only be leftovers from pre-r18
-    * binaries (which wrote at the root with a marker protocol); no such
-    * binary exists any more — all mains rebuild together — so they are
-    * dead by construction and swept unconditionally. */
-  private def sweepStale(root: java.io.File): Unit = {
-    val subs = Option(root.listFiles()).getOrElse(Array.empty)
-    for (s <- subs if s.isDirectory) {
-      val n = s.getName
-      val stale =
-        if (n.nonEmpty && n.forall(_.isDigit))
-          !java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"/proc/$n"))
-        else n.startsWith("blockmgr-") || n.startsWith("spark-")
-      if (stale) deleteRecursively(s)
-    }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE on (runtime coalesce/skew/broadcast re-plan) and runtime bloom
-      // filters for the big anti-join paths (SURVEY.md 4.2-4.3).
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      // count(*)-style parameter derivations (LSH planes, IVF stride)
-      // become parquet-footer reads instead of full count jobs
-      .config("spark.sql.parquet.aggregatePushDown", "true")
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, SQLAppStatusListener retains the last
-      // 1000 SQL executions — each holding the FULL physical-plan
-      // description string (100s of KB for the iterative/unrolled
-      // plans). A 160-query × reps sweep never evicts, so heap climbs
-      // monotonically and the tail of the sweep runs under GC pressure
-      // (the round-7 driver sweep measured iterative queries 7-14x
-      // their isolated cost for exactly this reason). Same for the
-      // job/stage/task status stores. Cap them to what a live debugger
-      // would actually look at.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-    // r20: optional conf overrides for measurement A/Bs, e.g.
-    // SPARK_GRAFT_CONF="spark.io.compression.codec=zstd;spark.x=y".
-    // Unset (the driver's case) this is a no-op — the bench config the
-    // driver compares against is exactly the block above.
-    val b1 = sys.env.get("SPARK_GRAFT_CONF").fold(b0) { s =>
-      s.split(';').filter(_.contains('=')).foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-    }
-    val spark = localDir().fold(b1)(d => b1.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus.toInt)
     // Untimed warmup: JVM/codegen/shuffle-machinery spin-up otherwise
     // lands entirely on whichever query happens to run first. The second
     // warmup touches the parquet reader, broadcast-join machinery, and

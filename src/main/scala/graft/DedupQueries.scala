@@ -218,13 +218,14 @@ object DedupQueries {
     // — every index read pays block-fetch + deserialization, and that
     // path is far more sensitive to box state than a heap-resident
     // cache. The r8 heap pressure was root-caused to the status-store
-    // retention leak (fixed in Bench.scala), so the heap-rent argument
+    // retention leak (fixed in Session.scala), so the heap-rent argument
     // no longer binds; stability wins. MEMORY_AND_DISK_SER was the
-    // third candidate (r17 ProfileSer A/B, PERF.md): it OOMs an 8g JVM
-    // outright (transient object-graph + serialization-buffer double
-    // footprint across 32 concurrent cache builds) and measures ~9%
-    // slower at 24g — serialized-in-heap re-imports the rent the tmpfs
-    // spill tier already pays for free. Question closed.
+    // third candidate (PERF.md r17, "MEMORY_AND_DISK_SER loses at BOTH
+    // heap sizes"): it OOMs an 8g JVM outright (transient object-graph
+    // + serialization-buffer double footprint across 32 concurrent
+    // cache builds) and measures ~9% slower at 24g — serialized-in-heap
+    // re-imports the rent the tmpfs spill tier already pays for free.
+    // Question closed.
     val ex = shingleIndex(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
     val sizes = ex.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = ex.toDF("i", "h")
@@ -310,8 +311,8 @@ object DedupQueries {
     * "shuffle fewer bytes"): the old verification expanded every
     * candidate pair by ALL of doc i's postings and re-joined on (j, h)
     * — at sf1 that is 17.3 M candidates × ~52 postings ≈ 0.9 G skinny
-    * join rows, measured **248.7 s of a ~260 s query**
-    * (tools/ProfilePrefix; candidate generation itself was 1.1 s).
+    * join rows, measured **248.7 s of a ~260 s query** (PERF.md
+    * "Round 21", item 2; candidate generation itself was 1.1 s).
     * Verification now joins the candidate list to a per-doc sorted
     * token-hash ARRAY table (one row per doc, built from the same
     * capped index) and counts |A∩B| with the native `array_intersect`
@@ -352,6 +353,13 @@ object DedupQueries {
       val docToks = ex.groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("h"))).as("toks"),
           count(lit(1)).as("n"))
+      // shuffle_hash builds a per-partition hash table of docToks (one
+      // row per doc, its whole token array). That is only safe while
+      // spark.sql.shuffle.partitions grows with the corpus: at a fixed
+      // partition count each build partition grows linearly with the
+      // doc count and a large enough corpus would not fit in memory,
+      // where a sort-merge join would spill. The hint was measured at
+      // sf1 on 32 partitions (PERF.md "Round 21", item 2).
       cands
         .join(docToks.toDF("i", "ti", "na").hint("shuffle_hash"), Seq("i"))
         .join(docToks.toDF("j", "tj", "nb").hint("shuffle_hash"), Seq("j"))
@@ -380,6 +388,35 @@ object DedupQueries {
 
   // ------------------------------------------------------ decontamination
 
+  /** Train/bench fixture shared by [[decontaminate]] and
+    * [[contamFraction]]: docs with doc_id%41 = 0 play the eval set; the
+    * train side is every other doc plus planted contaminations (eval
+    * texts with a prefix bolted on, +3000000 ids).
+    *
+    * The fixture deliberately scales the eval set with the corpus so
+    * the contamination path is exercised in proportion at every SF.
+    * The fixed-eval-set scaling witness (eval set pinned to doc_id <
+    * 50000 at both decades) is recorded in PERF.md "Round 18 decade-3
+    * scaling extended to the full 102-query sf10 gate set". */
+  private def contamFixture(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
+    val isBench = col("doc_id") % 41 === 0
+    val bench = d.filter(isBench)
+    val train = d.filter(!isBench)
+      .unionAll(bench.select((col("doc_id") + 3000000).as("doc_id"),
+        concat(lit("prefix padding before the leaked evaluation text "),
+          col("text")).as("text")))
+    (bench, train)
+  }
+
+  /** Oracle CTEs mirroring [[contamFixture]]. */
+  private val ddbContamFixture =
+    """bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 41 = 0),
+      |train AS (
+      |  SELECT doc_id, text FROM documents WHERE doc_id % 41 <> 0
+      |  UNION ALL
+      |  SELECT doc_id + 3000000, 'prefix padding before the leaked evaluation text ' || text FROM bench)""".stripMargin
+
   /** Benchmark decontamination: flag TRAINING docs whose shingle overlap
     * with any EVAL-set doc exceeds a threshold — the step that keeps
     * test sets out of the training corpus. Same inverted-index shape as
@@ -401,65 +438,25 @@ object DedupQueries {
     * train side is every other doc plus planted contaminations (eval
     * texts with a prefix bolted on, +3000000 ids) so the flag path is
     * genuinely exercised. */
-  /** Train/bench fixture shared by [[decontaminate]] and
-    * [[contamFraction]]: docs with doc_id%41 = 0 play the eval set; the
-    * train side is every other doc plus planted contaminations (eval
-    * texts with a prefix bolted on, +3000000 ids).
-    *
-    * `benchMax` (witness hook, tools.DecontamWitness) additionally pins
-    * the eval set to doc_id < benchMax. The generators emit documents
-    * as a seed-identical prefix stream (gen_sf10.py), so the SAME
-    * benchMax selects the IDENTICAL eval docs at every SF — the
-    * production workload shape, where the benchmark suite does not grow
-    * with the training corpus. The registry query passes None: its
-    * fixture deliberately scales the eval set with the corpus so the
-    * contamination path is exercised in proportion at every SF. */
-  private[graft] def contamFixture(s: SparkSession, dir: String,
-      benchMax: Option[Long] = None): (DataFrame, DataFrame) = {
-    val d = table(s, dir, "documents").select(col("doc_id"), col("text"))
-    val isBench = benchMax.foldLeft(col("doc_id") % 41 === 0)(
-      (p, m) => p && col("doc_id") < m)
-    val bench = d.filter(isBench)
-    val train = d.filter(!isBench)
-      .unionAll(bench.select((col("doc_id") + 3000000).as("doc_id"),
-        concat(lit("prefix padding before the leaked evaluation text "),
-          col("text")).as("text")))
-    (bench, train)
-  }
-
-  /** The decontaminate pipeline body, parameterized by the fixture's
-    * benchMax so tools.DecontamWitness times the registry-identical
-    * plan with a fixed eval set. */
-  private[graft] def decontaminatePipeline(s: SparkSession, dir: String,
-      benchMax: Option[Long]): DataFrame = {
-    val (bench, train) = contamFixture(s, dir, benchMax)
-    val trainIx = rawShingleIndexOf(train).toDF("train_id", "h")
-    // bench index feeds two branches (the h-join and the sizes);
-    // persist it so the bench scan + shingle explode runs once
-    val benchIx = shingleIndexOf(bench).toDF("bench_id", "h")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val benchSizes = benchIx.groupBy(col("bench_id"))
-      .agg(count(lit(1)).as("bench_n"))
-    trainIx.join(benchIx, Seq("h"))
-      .groupBy(col("train_id"), col("bench_id"))
-      .agg(count(lit(1)).as("shared"))
-      .join(benchSizes, Seq("bench_id"))
-      .select(col("train_id"), col("bench_id"), col("shared"),
-        (col("shared").cast("double") / col("bench_n")).as("containment"))
-      .filter(col("containment") >= 0.5)
-  }
-
-  /** Oracle CTEs mirroring [[contamFixture]]. */
-  private val ddbContamFixture =
-    """bench AS (SELECT doc_id, text FROM documents WHERE doc_id % 41 = 0),
-      |train AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 41 <> 0
-      |  UNION ALL
-      |  SELECT doc_id + 3000000, 'prefix padding before the leaked evaluation text ' || text FROM bench)""".stripMargin
-
   val decontaminate: Q = Q(
     "curate_decontaminate",
-    (s, dir) => decontaminatePipeline(s, dir, None),
+    (s, dir) => {
+      val (bench, train) = contamFixture(s, dir)
+      val trainIx = rawShingleIndexOf(train).toDF("train_id", "h")
+      // bench index feeds two branches (the h-join and the sizes);
+      // persist it so the bench scan + shingle explode runs once
+      val benchIx = shingleIndexOf(bench).toDF("bench_id", "h")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val benchSizes = benchIx.groupBy(col("bench_id"))
+        .agg(count(lit(1)).as("bench_n"))
+      trainIx.join(benchIx, Seq("h"))
+        .groupBy(col("train_id"), col("bench_id"))
+        .agg(count(lit(1)).as("shared"))
+        .join(benchSizes, Seq("bench_id"))
+        .select(col("train_id"), col("bench_id"), col("shared"),
+          (col("shared").cast("double") / col("bench_n")).as("containment"))
+        .filter(col("containment") >= 0.5)
+    },
     Some {
       s"""WITH $ddbContamFixture,
          |tix AS (SELECT doc_id AS train_id, h FROM ${ddbShingleIx("train", capped = false)} t0),
@@ -758,9 +755,15 @@ object DedupQueries {
     * (R20OptSpec): outputPartitioning does NOT survive the checkpoint
     * under AQE — the win is the InternalRow store + honest stats, not
     * partitioning reuse. Trade (documented upstream): a
-    * localCheckpoint is not fault-tolerant to executor loss — on a
-    * cluster the loop recomputes from the last cut, the same recovery
-    * story the old persist(MEMORY_AND_DISK) had.
+    * localCheckpoint is not fault-tolerant. Once the cut is
+    * materialized its lineage is gone, so a block lost with an
+    * executor cannot be recomputed — not from the last cut, not from
+    * the source; the job that reads it fails. The old
+    * persist(MEMORY_AND_DISK) kept its lineage and recomputed lost
+    * blocks; this cut trades that for the flat plan. Fine in local
+    * mode (the driver holds every block); on a cluster that must
+    * survive executor loss the loop needs a reliable `checkpoint()`
+    * to a checkpoint dir instead.
     *
     * r21: the cut is LAZY (eager=false) — guide §1.3/§5, "fold the
     * convergence read into the materialization": eager checkpointing
@@ -773,17 +776,19 @@ object DedupQueries {
     * the query's single terminal job in the fixed-round chains)
     * computes the checkpoint RDD, caches its blocks via the persist
     * level, and finalizes the checkpoint at job end — one job does
-    * both. SAFETY CONDITION: the first scan of the returned frame must
-    * not race — i.e. the first downstream stage that reads the leaf
-    * must be the only one reading it until it completes (true for
-    * every caller here: the loop counts scan it alone, and the
-    * fixed-round chains order every scan behind the previous round's
-    * broadcast/shuffle). Two CONCURRENT stages over a not-yet-
-    * materialized leaf would each compute it (correct, since blocks
-    * store once, but duplicated work) — multi-consumer one-shot DAGs
-    * like sim_ivf_nprobe_sweep keep their EAGER cuts for exactly that
+    * both. COST CONDITION (not a correctness one): the saving holds
+    * only while the first stage that reads the leaf reads it alone
+    * until it completes. The loop counts scan it alone, and the
+    * fixed-round chains mostly order later scans behind the previous
+    * round's broadcast/shuffle — but nothing enforces that order: under
+    * AQE two independent leaf stages of one job (e.g. both sides of a
+    * join) can be submitted together and each compute the
+    * not-yet-materialized cut. That duplicates the work and keeps the
+    * results correct (the blocks store once, the partitions are
+    * deterministic). Multi-consumer one-shot DAGs like
+    * sim_ivf_nprobe_sweep keep their EAGER cuts for exactly that
     * reason (see SimilarityQueries). */
-  private def cutLineage(df: DataFrame): DataFrame =
+  private[graft] def cutLineage(df: DataFrame): DataFrame =
     df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
 
   private def maybeCutLineage(df: DataFrame, sinceRebase: Int, depth: Int): DataFrame =
@@ -1492,7 +1497,7 @@ object DedupQueries {
     * The previous shape persisted each round WITHOUT a cut on the
     * claim that "the loop rebuilds from the persisted edge set each
     * round, so plan depth stays linear" — measured FALSE at sf1
-    * (tools/ProfileKcore): a persist does not truncate the ANALYZED
+    * (PERF.md "Round 21", item 1): a persist does not truncate the ANALYZED
     * plan (cache substitution happens at planning), and each round
     * references the previous frame ~3× (degree branch + two
     * semi-joins), so the logical tree grows ~3^rounds. The sf1 graph
@@ -1629,10 +1634,11 @@ object DedupQueries {
       val gParts = math.max(2, math.min(
         s.sessionState.conf.numShufflePartitions, (n / 65536L).toInt + 1))
       // lazy cut (r21): the terminal job's first scan (the init
-      // distinct below) materializes the checkpoint; every later scan
-      // is ordered behind the previous round's broadcast, so the
-      // single-reader safety condition holds and the old separate
-      // checkpoint job folds into the chain job.
+      // distinct below) materializes the checkpoint and the old
+      // separate checkpoint job folds into the chain job. Later scans
+      // usually queue behind the previous round's broadcast, but AQE
+      // may run two leaf stages over the cut at once; then both
+      // compute it — duplicated work, same result (see cutLineage).
       val adjCut = cutLineage(adjd.repartition(gParts, col("src")))
       var ranks = adjCut.select(col("src").as("v")).distinct()
         .select(col("v"), lit(init).as("r"))
@@ -1720,7 +1726,7 @@ object DedupQueries {
     val n = adj.select(col("src")).distinct().count()
     val gParts = math.max(2, math.min(
       s.sessionState.conf.numShufflePartitions, (n / 65536L).toInt + 1))
-    // lazy cut (r21) — same single-reader ordering as pagerank's
+    // lazy cut (r21) — same cost condition as pagerank's (cutLineage)
     val adjCut = cutLineage(adj.repartition(gParts, col("src")))
     var labels = adjCut.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
@@ -2034,8 +2040,9 @@ object DedupQueries {
       // materialized once during checkpointing and never read again.
       // Lazy cuts (r21): the terminal job materializes both leaves —
       // seeds first (inside round 1's broadcast build), then adj in
-      // round 1's probe stage — each read by exactly one stage until
-      // materialized, so the single-reader condition holds.
+      // round 1's probe stage — each normally read by one stage until
+      // materialized; a concurrent second reader would duplicate the
+      // work, not change the result (see cutLineage).
       val adj = cutLineage(
         e.select(col("i").as("src"), col("j").as("dst"))
           .unionAll(e.select(col("j").as("src"), col("i").as("dst")))

@@ -711,16 +711,14 @@ object DqQueries {
     * depends on input size. PlanShapeSpec pins the ONE-scan shape. */
   /** [[profileWide]]'s one-scan frame over an ARBITRARY source and
     * column set — factored out (r13) so the ≥50-column plan pin
-    * (PlanShapeSpec) and the staged-fix A/B (tools/ProfileWide) run
-    * the exact production shape instead of a test re-implementation.
-    * `scatter`/`legacyHv` exist ONLY so the A/B tool can reconstruct
-    * the "before" stages of the r11 25.3 s → 2.75 s fix (PERF.md r11);
-    * the registry query always runs (scatter = true, legacyHv =
-    * false). */
+    * (PlanShapeSpec) runs the exact production shape instead of a test
+    * re-implementation. The staged r11 fix this shape carries (25.3 s →
+    * 2.75 s at sf0.1) and its per-column marginal cost are recorded in
+    * PERF.md ("Round 11 `dq_profile_wide` staged fix", "Round 13
+    * `dq_profile_wide` per-column marginal cost"). */
   private[graft] def wideProfileFrame(
-      src: DataFrame, cols: Seq[WCol], parallelism: Int,
-      scatter: Boolean = true, legacyHv: Boolean = false): DataFrame = {
-    import SketchQueries.{hexValSql, rhoSql, HllM, HllWBits, HllEstConst}
+      src: DataFrame, cols: Seq[WCol], parallelism: Int): DataFrame = {
+    import SketchQueries.{rhoSql, HllM, HllWBits, HllEstConst}
     val numericNames = cols.filter(c => c.kind == "int" || c.kind == "dbl")
       .map(_.name)
     val entries = cols.map { c =>
@@ -741,7 +739,7 @@ object DqQueries {
     // it and would run single-threaded (the codec-tier lesson,
     // PERF.md r10) — scatter the narrow source rows first (measured
     // 20.4 s -> 2.75 s at sf0.1 on 32 cores)
-    (if (scatter) src.repartition(parallelism) else src)
+    src.repartition(parallelism)
       .select(explode(array(entries: _*)).as("e"))
       .select(col("e.col_name").as("col_name"), col("e.sval").as("sval"),
         col("e.nval").as("nval"), col("e.sval_mm").as("sval_mm"))
@@ -750,9 +748,8 @@ object DqQueries {
       // this runs once per (row × column) so the constant matters
       // (part of the 25.3 s -> 2.75 s fix at sf0.1, PERF.md r11); the oracle keeps the
       // positional-arithmetic spelling, which is cheap at oracle scale
-      .withColumn("hv", expr(
-        if (legacyHv) hexValSql("md5(sval)")
-        else "CAST(conv(substr(md5(sval), 1, 12), 16, 10) AS BIGINT)"))
+      .withColumn("hv",
+        expr("CAST(conv(substr(md5(sval), 1, 12), 16, 10) AS BIGINT)"))
       .select(col("col_name"), col("sval"), col("nval"), col("sval_mm"),
         (col("hv") % HllM).as("bucket"),
         expr(rhoSql(s"(hv div $HllM)")).as("rho"))

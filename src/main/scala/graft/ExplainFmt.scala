@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to stdout, delimited
   * per query — the plans/rNN before/after evidence files. Iterative
   * queries (graph_*, dedup_clusters*) drive materialization from inside
@@ -13,14 +11,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushDown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Session.build(4)
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"===== $name")

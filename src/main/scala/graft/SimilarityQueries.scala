@@ -209,42 +209,32 @@ object SimilarityQueries {
     * ([[probeRanks]] windows over the |Q|·K query scores only) and
     * ranks only their members. The candidate join shuffles on the
     * centroid id — cost follows list sizes (≈√n), independent of
-    * corpus². */
-  /** The [[annIvf]] pipeline body, with the probe set optionally pinned
-    * to query ids below `qCap`. The registry query passes None (probes =
-    * every [[QueryMod]]-th vector — the documented queries-grow-with-
-    * corpus workload model). `Some(cap)` is the FIXED-QUERY-STREAM
-    * scaling witness (r15 verdict task 5): gen_sf10's embeddings are a
-    * strict prefix-extension of sf1's (same seed, row-major generation),
-    * so capping query ids at sf1's vector-space size pins |Q| to the
-    * SAME query set at both decades — what a production serving workload
-    * looks like — and the measured sf1→sf10 ratio isolates per-query
-    * cost growth in n (claimed ~linear from the nprobe·listsize
-    * arithmetic; [[graft.tools.AnnWitness]] measures it). */
-  private[graft] def annIvfPipeline(s: SparkSession, dir: String,
-      qCap: Option[Long] = None): DataFrame = {
-    val e = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val stride = ivfStride(e.count())
-    val centroids = e.filter(col("vec_id") % stride === lit(3L % stride))
-      .toDF("centroid_id", "c_emb")
-    val nProbe = ivfNProbe(centroids.count())
-    val lists = assignArgmax(e, centroids)
-      .toDF("neighbor_id", "n_emb", "centroid_id")
-    val qBase = e.filter(col("vec_id") % QueryMod === 0)
-    val qSet = qCap.fold(qBase)(c => qBase.filter(col("vec_id") < c))
-    val probes = probeRanks(qSet, centroids, nProbe)
-    val scored = probes.join(lists, Seq("centroid_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        H.cosine(col("q_emb"), col("n_emb")).as("cosine"))
-    // bounded-heap top-k ((query, neighbor) pairs are unique: every
-    // neighbor lives in exactly one inverted list)
-    topK(scored, 3)
-  }
-
+    * corpus². Probes are every [[QueryMod]]-th vector — the documented
+    * queries-grow-with-corpus workload model. The fixed-query-stream
+    * scaling witness (|Q| pinned to sf1's query set at both decades:
+    * measured sf1→sf10 ratio 4.05, ~linear in n as the nprobe·listsize
+    * arithmetic claims) is PERF.md "Round 16 fixed-query-stream ANN
+    * witness". */
   val annIvf: Q = Q(
     "sim_ann_ivf",
-    (s, dir) => annIvfPipeline(s, dir),
+    (s, dir) => {
+      val e = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      val stride = ivfStride(e.count())
+      val centroids = e.filter(col("vec_id") % stride === lit(3L % stride))
+        .toDF("centroid_id", "c_emb")
+      val nProbe = ivfNProbe(centroids.count())
+      val lists = assignArgmax(e, centroids)
+        .toDF("neighbor_id", "n_emb", "centroid_id")
+      val probes = probeRanks(
+        e.filter(col("vec_id") % QueryMod === 0), centroids, nProbe)
+      val scored = probes.join(lists, Seq("centroid_id"))
+        .filter(col("neighbor_id") =!= col("query_id"))
+        .select(col("query_id"), col("neighbor_id"),
+          H.cosine(col("q_emb"), col("n_emb")).as("cosine"))
+      // bounded-heap top-k ((query, neighbor) pairs are unique: every
+      // neighbor lives in exactly one inverted list)
+      topK(scored, 3)
+    },
     Some(
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |params AS (SELECT GREATEST(1, CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT)) AS stride FROM e),

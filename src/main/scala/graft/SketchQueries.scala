@@ -1481,10 +1481,10 @@ object SketchQueries {
     * broadcast at runtime when the DV side MEASURES small, which is the
     * correct adaptive call, sized on churn rather than assumed).
     * Measured A/B under a forced heavy-delete fixture (50% churn, 10×
-    * orders at sf0.1, [[graft.tools.ProfileMor]]): broadcast 1.28 s /
-    * shuffle 0.96 s — the co-partitioned form wins exactly where the
-    * bound breaks (PERF.md r11); PlanShapeSpec pins the static plan's
-    * ShuffledHashJoin. */
+    * orders at sf0.1): broadcast 1.28 s / shuffle 0.96 s — the
+    * co-partitioned form wins exactly where the bound breaks (PERF.md
+    * r11 "MOR deletion-vector scan"); PlanShapeSpec pins the static
+    * plan's ShuffledHashJoin. */
   val morScan: Q = Q(
     "layout_mor_scan",
     (s, dir) => {

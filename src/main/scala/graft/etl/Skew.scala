@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * shuffle key whose hot values overwhelm single tasks in a SORT/HASH
   * join against a side that can be replicated.
   *
-  * Measured A/B (tools/ProfileSkew, r10, PERF.md; clean re-run after a
-  * conf-leak retraction): on a 6M-row fact with ~35% of rows on ONE key
-  * (hot shuffle partition 16× the median by row count), manual salting
+  * Measured A/B (PERF.md "Round-10 AQE skew-join vs manual salting
+  * A/B"; clean re-run after a conf-leak retraction): on a 6M-row fact
+  * with ~35% of rows on ONE key (hot shuffle partition 16× the median
+  * by row count), manual salting
   * cut the join stage 5.5 → 2.9 s, while AQE's OptimizeSkewedJoin —
   * force-enabled, thresholds dropped to 256 KB / factor 1.2 (conf names
   * verified effective via SET -v) — logged "number of skewed

@@ -205,7 +205,7 @@ object VentasTotales {
     // BOTH sides recompute the prepared subtree rather than persisting
     // it — re-A/B'd under round-8 full-sweep conditions after the
     // round-7 driver sweep measured this query at 63 s: with the
-    // status-store retention leak fixed (see Bench.scala), recompute
+    // status-store retention leak fixed (see Session.scala), recompute
     // runs 4.7 s in-sweep vs 11.1 s for the persisted variant (cache
     // materialization of 1.2M wide rows + broken codegen fusion). The
     // round-7 blowup was heap pressure from the leak, not this shape.
@@ -214,27 +214,14 @@ object VentasTotales {
         prepared(spark, sfDir), lit(true), DedupNormalization))
   }
 
-  /** The two-pass anti-join formulation of [[rerun]] (A/B twin). */
-  private[graft] def rerunAntiJoin(spark: SparkSession, sfDir: String): DataFrame =
-    rerunOver(prepared(spark, sfDir))
-
-  /** Dev seam for the materialization A/B (tools.ProfileVentas): the
-    * rerun anti-join over an externally materialized `prepared` frame
-    * (recompute / persist / parquet-checkpoint variants). */
-  private[graft] def rerunOver(incoming: DataFrame): DataFrame =
+  /** The two-pass anti-join formulation of [[rerun]] (A/B twin; the
+    * materialization A/B is PERF.md "Round-9 ventas materialization
+    * three-way A/B"). */
+  private[graft] def rerunAntiJoin(spark: SparkSession, sfDir: String): DataFrame = {
+    val incoming = prepared(spark, sfDir)
     toTargetColumns(
       Dedup.antiJoinNewNormalized(
         incoming, incoming.select(KeyCols.map(col): _*),
         DedupNormalization))
-
-  /** Dev seam: the incremental load over a materialized `prepared`
-    * (same population as [[load]]: the full file vs the pre-cutoff
-    * key scan, both derived from the one materialized frame). */
-  private[graft] def loadOver(incoming: DataFrame): DataFrame =
-    toTargetColumns(
-      Dedup.antiJoinNewNormalized(
-        incoming,
-        incoming.filter(col("__ship") < to_date(lit(Cutoff)))
-          .select(KeyCols.map(col): _*),
-        DedupNormalization))
+  }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standing cross-SF scaling audit (round-9 verdict task 7): bench the
   * FULL registry at sf0.01 and sf0.1 (10x the data) in one JVM and emit
   * `SCALING.json` — per-query seconds at both scale factors, the ratio,
@@ -24,24 +22,9 @@ object Scaling {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "2").toInt)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.sql.parquet.aggregatePushDown", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-    // Same tmpfs shuffle-dir policy as Bench (r16 A/B) — BOTH decade
-    // sides measured under it, so ratios are unaffected by the level.
-    val spark = graft.Bench.localDir().fold(b0)(d => b0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session's tmpfs shuffle-dir policy (r16 A/B) holds for BOTH
+    // decade sides, so ratios are unaffected by the level.
+    val spark = graft.Session.build(cpus.toInt)
     spark.range(2000000).selectExpr("sum(id)").collect()
 
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_SMALL", "/root/testdata/sf0.01")

@@ -44,6 +44,9 @@ class ArrayCosineSpec extends SparkSpec {
       .withColumn("c", H.cosine(col("a"), col("b")))
     val got = df.select("c").collect().map(r => Option(r.get(0)))
     assert(got(0).isEmpty && got(1).isEmpty && got(2).isDefined)
+    dropGraftFunctions()
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_cosine(array(1.0F), array(1.0F))"))
     // null ELEMENT nulls the result (HOF parity) — via the SQL name
     org.apache.spark.sql.graftbridge.Bridge.registerGraftFunctions(spark)
     assert(spark.sql(

@@ -71,6 +71,9 @@ class CleanExprSpec extends SparkSpec {
   }
 
   test("null propagation and SQL registration") {
+    dropGraftFunctions()
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_clean_name('a'), graft_strip_numeric('1', 'accounting')"))
     org.apache.spark.sql.graftbridge.Bridge.registerGraftFunctions(spark)
     val r = Seq((Option.empty[String], Some("($1,2)"))).toDF("a", "b")
       .selectExpr("graft_clean_name(a)", "graft_strip_numeric(b, 'accounting')")

@@ -477,8 +477,8 @@ class PlanShapeSpec extends SparkSpec {
     // claims linear-in-columns at 100. Gate the claim's plan half at
     // ≥50: a 55-column parquet (r12 verdict task 6) must still plan as
     // ONE scan + the unpivot Generate, no join, no per-column re-read.
-    // (The cost half — per-column marginal seconds — is measured by
-    // tools/ProfileWide and recorded in PERF.md.)
+    // (The cost half — per-column marginal seconds — is recorded in
+    // PERF.md "Round 13 `dq_profile_wide` per-column marginal cost".)
     val (wide, wcols) = DqQueries.syntheticWide(
       spark.read.parquet(s"$Sf/lineitem.parquet"), 55)
     val out = java.nio.file.Files.createTempDirectory("graft-wide55")
@@ -496,7 +496,8 @@ class PlanShapeSpec extends SparkSpec {
     // the DV table grows with TOTAL delete churn (~n_deletes/64 longs),
     // so the static plan must shuffle-join it (broadcast is only ever a
     // runtime AQE downgrade when the side MEASURES small); A/B at 50%
-    // churn: broadcast 1.28 s vs shuffle 0.96 s (ProfileMor, PERF.md r11)
+    // churn: broadcast 1.28 s vs shuffle 0.96 s (PERF.md r11 "MOR
+    // deletion-vector scan")
     val p = plan("layout_mor_scan")
     assert(p.contains("ShuffledHashJoin [file_id"), p)
     assert(!p.contains("BroadcastHashJoin"), p)

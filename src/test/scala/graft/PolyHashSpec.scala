@@ -41,6 +41,9 @@ class PolyHashSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_polyhash callable after Bridge registration") {
+    dropGraftFunctions()
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_polyhash('abc')"))
     org.apache.spark.sql.graftbridge.Bridge.registerGraftFunctions(spark)
     val viaSql = spark.sql("SELECT graft_polyhash('abc') AS h").collect()(0).getLong(0)
     val viaCol = Seq("abc").toDF("x").select(T.polyHash(col("x"))).collect()(0).getLong(0)

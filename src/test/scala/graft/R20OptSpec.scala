@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * checkpoint does NOT preserve outputPartitioning under AQE — a
   * same-key aggregate above the cut still plans its exchange; that
   * negative result is pinned in the test body so no future round
-  * builds on the disproven partitioning-preservation claim. */
+  * builds on the disproven partitioning-preservation claim. Both the
+  * eager cut and the shipped lazy [[DedupQueries.cutLineage]] are
+  * checked. */
 class R20OptSpec extends SparkSpec {
 
   test("scatter decision: fires only when the scan is under-split vs the session") {
@@ -52,27 +54,34 @@ class R20OptSpec extends SparkSpec {
   test("localCheckpoint cut preserves rows and carries usable size stats (join strategy stays size-driven)") {
     val base = spark.range(0, 1000).select(
       (col("id") % 37).as("src"), col("id").as("v"))
-    val cut = base.repartition(4, col("src")).localCheckpoint(true)
-    // (a) rows survive the cut
-    assert(cut.count() == 1000)
-    // (b) the LogicalRDD leaf carries a real (small) size estimate,
-    // not the defaultSizeInBytes sentinel — this is what lets the
-    // planner broadcast the small side of the per-round graph-loop
-    // joins (the r20 plan flips SMJ -> BHJ in plans/r20/*_after.txt)
-    val stats = cut.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(stats > 0 &&
-      stats < spark.sessionState.conf.autoBroadcastJoinThreshold * 64, s"stats=$stats")
-    val big = spark.range(0, 200000).select(
-      (col("id") % 37).as("src"), col("id").as("w"))
-    val joined = big.join(cut.groupBy(col("src")).agg(sum(col("v")).as("sv")), Seq("src"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    // NOTE (measured here, kept as a pin): the checkpoint does NOT
-    // preserve outputPartitioning under AQE — a same-key aggregate
-    // above the cut still plans its exchange. The r20 win is the
-    // InternalRow store + honest stats, not partitioning reuse.
-    val agg = cut.groupBy(col("src")).agg(sum(col("v")))
-    assert(agg.queryExecution.executedPlan.toString
-      .contains("Exchange hashpartitioning"))
+      .repartition(4, col("src"))
+    // the eager cut (r20) and the shipped lazy one (r21), both checked
+    for ((kind, cut) <- Seq(
+        "eager" -> base.localCheckpoint(true),
+        "lazy" -> DedupQueries.cutLineage(base))) {
+      // (a) rows survive the cut (for the lazy cut, this count is the
+      // action that materializes it)
+      assert(cut.count() == 1000, kind)
+      // (b) the LogicalRDD leaf carries a real (small) size estimate,
+      // not the defaultSizeInBytes sentinel — this is what lets the
+      // planner broadcast the small side of the per-round graph-loop
+      // joins (the r20 plan flips SMJ -> BHJ in plans/r20/*_after.txt)
+      val stats = cut.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(stats > 0 &&
+        stats < spark.sessionState.conf.autoBroadcastJoinThreshold * 64,
+        s"$kind stats=$stats")
+      val big = spark.range(0, 200000).select(
+        (col("id") % 37).as("src"), col("id").as("w"))
+      val joined = big.join(cut.groupBy(col("src")).agg(sum(col("v")).as("sv")), Seq("src"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("BroadcastHashJoin"), s"$kind: $plan")
+      // NOTE (measured here, kept as a pin): the checkpoint does NOT
+      // preserve outputPartitioning under AQE — a same-key aggregate
+      // above the cut still plans its exchange. The r20 win is the
+      // InternalRow store + honest stats, not partitioning reuse.
+      val agg = cut.groupBy(col("src")).agg(sum(col("v")))
+      assert(agg.queryExecution.executedPlan.toString
+        .contains("Exchange hashpartitioning"), kind)
+    }
   }
 }

@@ -68,6 +68,9 @@ class TopKAggSpec extends SparkSpec {
 
   test("SQL registration: graft_topk(score, id, k)") {
     import spark.implicits._
+    dropGraftFunctions()
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_topk(0.5D, 1L, 1)"))
     org.apache.spark.sql.graftbridge.Bridge.registerGraftFunctions(spark)
     Seq((1L, 5L, 0.3), (1L, 6L, 0.8)).toDF("g", "i", "s")
       .createOrReplaceTempView("tk_in")

@@ -18,7 +18,7 @@ warmup and unrelated queries still resolve paths).
 NOT part of the shipped library — generation + measurement only.
 
 Since r16 every table is written in the PRODUCTION FILE SHAPE —
-~32 row groups per file (gen_rgtest.py's rule) — instead of pyarrow's
+~32 row groups per file (write_rg below) — instead of pyarrow's
 default single row group. Three rounds of scaling adjudication
 (PERF.md r13/r14/r15 rgtest blocks) traced every phantom superlinear
 flag to the one-row-group fixture serializing the scan stage; making
@@ -38,7 +38,7 @@ def write_rg(table, path, groups=32):
     """Write `table` with the production ~`groups`-row-group shape so
     scan parallelism grows with data. Tiny dims (<= groups rows) stay
     one row group — ceil-div would make one row group per ROW, which is
-    not the documented production shape either (see gen_rgtest.py)."""
+    not the documented production shape either."""
     n = table.num_rows
     rg = (n or 1) if n <= groups else math.ceil(n / groups)
     pq.write_table(table, path, row_group_size=rg)
