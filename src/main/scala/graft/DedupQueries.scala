@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Registry.Q
@@ -684,60 +686,6 @@ object DedupQueries {
 
   // --------------------------------------------- cluster resolution (CC)
 
-  /** Near-dup CLUSTER resolution: pair lists aren't actionable — a real
-    * dedup pipeline resolves the pair graph into connected components
-    * and keeps one canonical doc per component. Output: (doc_id,
-    * cluster_id = min doc_id of the component), every corpus doc
-    * included (singletons are their own cluster), keeper = doc_id ==
-    * cluster_id.
-    *
-    * Algorithm: iterative min-label propagation over the undirected
-    * pair edges — `label(v) ← min(label(v), min over neighbors
-    * label(u))` until fixpoint. Each round is one broadcast-or-shuffle
-    * join + one groupBy; rounds needed = component diameter, and dup
-    * components are stars/cliques around an original (diameter ≤ 2
-    * here, bounded small on real corpora), so the driver loop runs
-    * 2-3 rounds. For adversarial long-chain graphs swap the step for
-    * large-star/small-star (same join-groupBy primitives, O(log n)
-    * rounds). Labels persist per round and the previous round is
-    * unpersisted — lineage stays flat.
-    *
-    * Oracle: DuckDB recursive-CTE transitive closure over the same
-    * pairs + min(reachable) — exact same components (closure is fine at
-    * oracle scale; the Spark side never materializes reachability). */
-  /** Connected-component labels by alternating large-star / small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC'14): each round hooks every node's neighborhood
-    * to its minimum, so convergence is O(log n) rounds on ANY topology
-    * — vs [[clusterLabels]]'s min-label propagation, which needs
-    * diameter-many rounds. Min-label stays the production default for
-    * near-dup graphs (dup components are stars/cliques of diameter
-    * ≤ 2, where 2-3 cheap rounds win); this is the documented swap for
-    * adversarial long-chain graphs, and the spec drives it over a
-    * 60-node path — a graph the 20-round propagation cap can never
-    * finish. Both operations preserve components; at fixpoint the edge
-    * set IS the star (node → component-min), so labels fall out of one
-    * left join. `edges` may carry any orientation; self-loops drop. */
-
-  /** Iterative loops must cut Catalyst lineage PERIODICALLY, not just
-    * cache: each round's ANALYZED plan embeds the previous round's
-    * several times (the cache substitution that flattens it to an
-    * InMemoryRelation happens later, at planning), so the logical tree
-    * grows exponentially and by ~round 8 merely rendering the plan
-    * string OOMs the driver. But the cut itself is not free — rebasing
-    * on `df.rdd` round-trips every row through external Row objects
-    * and detaches the job from AQE (this ran EVERY round in round 6
-    * and regressed dedup_clusters 3.06 → 4.48 s). So: let the tree
-    * grow for `depth` rounds, then collapse to one LogicalRDD node.
-    * `depth` must reflect the loop's BRANCHING FACTOR — the uncut tree
-    * is branching^depth copies of the loop base, and Catalyst
-    * re-ANALYZES the full tree on every DataFrame built from it: the
-    * min-label loop references its frame 2×/round (depth 4 ⟹ ≤16
-    * copies, measured fastest), while the star loop references its
-    * edge set ~8×/round (depth 4 ⟹ ~4000 copies — measured 38 s of
-    * pure analyzer time at sf0.1, so it cuts every round). Typical
-    * near-dup min-label loops converge in 2-4 rounds and never pay the
-    * round-trip; adversarial long-chain graphs stay OOM-safe. */
   /** r20: the cut is `localCheckpoint`, not `createDataFrame(df.rdd)`.
     * Both collapse the analyzed tree to one LogicalRDD leaf, but the
     * rdd round-trip (a) deserializes every row to external Row objects
@@ -791,97 +739,159 @@ object DedupQueries {
   private[graft] def cutLineage(df: DataFrame): DataFrame =
     df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK)
 
-  private def maybeCutLineage(df: DataFrame, sinceRebase: Int, depth: Int): DataFrame =
-    if (sinceRebase < depth) df else cutLineage(df)
+  /** The convergence loop of [[starLabels]], [[clusterLabels]] and
+    * [[kcore]]: `next = step(prev)` from `init` until `stable(prev,
+    * next)`. No silent caps: after `maxRounds` it fails with `name` and
+    * the round count rather than return mid-iteration state.
+    *
+    * Iterative loops must cut Catalyst lineage PERIODICALLY, not just
+    * cache: each round's ANALYZED plan embeds the previous round's
+    * several times (the cache substitution that flattens it to an
+    * InMemoryRelation happens later, at planning), so the logical tree
+    * grows exponentially and by ~round 8 merely rendering the plan
+    * string OOMs the driver. But the cut itself is not free — rebasing
+    * on `df.rdd` round-trips every row through external Row objects
+    * and detaches the job from AQE (this ran EVERY round in round 6
+    * and regressed dedup_clusters 3.06 → 4.48 s). So: let the tree
+    * grow for `uncutRounds` persisted rounds, then collapse it to one
+    * LogicalRDD node ([[cutLineage]]; 0 = cut every round).
+    * `uncutRounds` must reflect the loop's BRANCHING FACTOR — the
+    * uncut tree is branching^rounds copies of the loop base, and
+    * Catalyst re-ANALYZES the full tree on every DataFrame built from
+    * it: the min-label loop references its frame 2×/round (4 uncut
+    * rounds ⟹ ≤16 copies, measured fastest), while the star loop
+    * references its edge set ~8×/round (4 ⟹ ~4000 copies — measured
+    * 38 s of pure analyzer time at sf0.1), so it runs ONE persisted
+    * round between cuts (≤64 copies); kcore reads its edges ~3×/round
+    * and cuts every round ([[kcore]] has the sf1 numbers). Typical
+    * near-dup min-label loops converge in 2-4 rounds and never pay the
+    * cut; adversarial long-chain graphs stay OOM-safe.
+    *
+    * Each new round is cut or persisted, never both (the checkpoint IS
+    * the store; a persist over it caches the same rows twice).
+    * `stable` is the round's only action and must materialize EVERY
+    * partition of `next` (a full count, not limit(1)): on a cut round
+    * it is the one job that computes, caches and finalizes the lazy
+    * checkpoint, and the superseded round is released right after it
+    * — a persisted one by `Dataset.unpersist`, a cut one through
+    * [[cutRdd]] once no live round reads it through lineage (at the
+    * next cut). `init` comes cut or persisted and is released like any
+    * round; the final round and the cut it reads stay with the caller. */
+  private[graft] def untilStable(name: String, init: DataFrame, maxRounds: Int,
+      uncutRounds: Int)(step: DataFrame => DataFrame)(
+      stable: (DataFrame, DataFrame) => Boolean): DataFrame = {
+    def release(df: DataFrame): Unit = cutRdd(df) match {
+      case Some(rdd) => rdd.unpersist(blocking = false)
+      case None => df.unpersist()
+    }
+    var prev = init
+    var heldCut: Option[DataFrame] = None // the cut the uncut rounds since read
+    var uncut = 0
+    var rounds = 0
+    var converged = false
+    while (!converged && rounds < maxRounds) {
+      val plan = step(prev)
+      val cut = uncut >= uncutRounds
+      val next = if (cut) cutLineage(plan) else plan.persist(StorageLevel.MEMORY_AND_DISK)
+      converged = stable(prev, next)
+      if (cut) { release(prev); heldCut.foreach(release); heldCut = None }
+      else if (cutRdd(prev).isDefined) heldCut = Some(prev)
+      else release(prev)
+      uncut = if (cut) 0 else uncut + 1
+      prev = next
+      rounds += 1
+    }
+    require(converged, s"$name: no fixpoint in $rounds rounds")
+    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
+      System.err.println(s"[$name] rounds=$rounds")
+    prev
+  }
 
+  /** The checkpoint RDD behind a [[cutLineage]] frame: the frame is a
+    * LogicalRDD over it, not a cache entry, so `Dataset.unpersist()`
+    * leaves its blocks until a GC lets the ContextCleaner drop them. */
+  private[graft] def cutRdd(df: DataFrame): Option[RDD[_]] =
+    Some(df.queryExecution.logical).collect { case r: LogicalRDD => r.rdd }
+
+  /** Connected-component labels by alternating large-star / small-star
+    * contraction (Kiveris et al., "Connected Components in MapReduce
+    * and Beyond", SoCC'14): each round hooks every node's neighborhood
+    * to its minimum, so convergence is O(log n) rounds on ANY topology
+    * — vs [[clusterLabels]]'s min-label propagation, which needs
+    * diameter-many rounds. Min-label stays the production default for
+    * near-dup graphs (dup components are stars/cliques of diameter
+    * ≤ 2, where 2-3 cheap rounds win); this is the documented swap for
+    * adversarial long-chain graphs, and the spec drives it over a
+    * 60-node path — a graph the 20-round propagation cap can never
+    * finish. Both operations preserve components; at fixpoint the edge
+    * set IS the star (node → component-min), so labels fall out of one
+    * left join. `edges` may carry any orientation; self-loops drop. */
   private[graft] def starLabels(nodes: DataFrame, edges0: DataFrame): DataFrame = {
     // the initial edge set is cut up front: with ~8 references per
     // round, even ONE uncut round would embed the (large) upstream
     // candidate-pair plan 8× in every analysis pass of the loop
-    val initPlan = edges0.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    // the checkpoint IS the materialized store — no persist on top
-    // (a persist layer over a checkpointed leaf caches the same rows
-    // twice and pays the IMR build for nothing). r21: the cut is lazy,
-    // so the count below is the single job that computes, caches AND
-    // finalizes the checkpoint — not a second pass over it.
-    var edges = cutLineage(initPlan)
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0
-    var rounds = 0
-    var sinceRebase = 0
-    while (!converged && rounds < 40) {
-      // Each star phase is "attach rows to min over the node's
-      // neighborhood" — ONE unordered partition-window per phase (the
-      // min and the join-back ride the same shuffle), instead of the
-      // groupBy + join-back pair that shuffles the neighbor list
-      // twice. Three shuffles per round total (large window, small
-      // window, final distinct) — at 100 TB that is half the per-round
-      // shuffle I/O. WindowExec buffers one node's neighborhood per
-      // group (spills via the external sorter); large-star halves hub
-      // degrees every round, so the buffers shrink geometrically.
-      import org.apache.spark.sql.expressions.Window
-      // large-star: attach every neighbor v > u to min(Γ(u) ∪ {u})
-      val nbrs = edges.select(col("src").as("u"), col("dst").as("v"))
-        .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
-      val large = nbrs
-        .withColumn("m",
-          least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-      // small-star: large's output is already oriented big→small
-      // (m = a neighborhood min ≤ u < v); attach the smaller neighbors
-      // AND u itself to the neighborhood min
-      val withM2 = large
-        .select(col("src").as("u"), col("dst").as("v"))
-        .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
-      val smallPlan = withM2
-        .select(col("v").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .unionAll(withM2.select(col("u").as("src"), col("m").as("dst")))
-        .distinct()
-      // branching ~8/round ⟹ cut every round (see maybeCutLineage);
-      // the base is a LogicalRDD after the initial cut, so the Row
-      // round-trip over the shrinking edge set is the cheaper side
-      val smallCut = maybeCutLineage(smallPlan, sinceRebase, 1)
-      // persist only the UNCUT rounds (a checkpointed round is already
-      // stored); the cut rounds' blocks release via ContextCleaner
-      val small =
-        if (smallCut eq smallPlan) smallCut.persist(StorageLevel.MEMORY_AND_DISK)
-        else smallCut
-      sinceRebase = if (small eq smallPlan) sinceRebase + 1 else 0
-      // full materialization BEFORE dropping the old round (on cut
-      // rounds this count IS the job that materializes the lazy
-      // checkpoint — one job per round, not checkpoint+count); equal
-      // cardinality + one-side inclusion ⟹ set equality (both distinct).
-      // left_anti, not except(): both sides are already distinct, and
-      // except() would re-distinct each side (two extra aggregations
-      // per round) before the anti join it compiles to anyway.
-      val smallCount = small.count()
-      converged = smallCount == edgeCount &&
-        small.join(edges, Seq("src", "dst"), "left_anti").isEmpty
-      edges.unpersist()
-      edges = small
-      edgeCount = smallCount
-      rounds += 1
-    }
-    require(converged, s"starLabels: no fixpoint in $rounds rounds")
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[starLabels] rounds=$rounds edges=$edgeCount")
-    val roots = edges.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
-    val out = nodes.select(col("doc_id"))
+    val init = cutLineage(edges0.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+    // r21: the cut is lazy, so this count is the one job that computes,
+    // caches AND finalizes the checkpoint — not a second pass over it
+    var edgeCount = init.count()
+    // branching ~8/round ⟹ one persisted round between cuts (untilStable)
+    val star = if (edgeCount == 0) init else
+      untilStable("starLabels", init, maxRounds = 40, uncutRounds = 1) { edges =>
+        // Each star phase is "attach rows to min over the node's
+        // neighborhood" — ONE unordered partition-window per phase (the
+        // min and the join-back ride the same shuffle), instead of the
+        // groupBy + join-back pair that shuffles the neighbor list
+        // twice. Three shuffles per round total (large window, small
+        // window, final distinct) — at 100 TB that is half the per-round
+        // shuffle I/O. WindowExec buffers one node's neighborhood per
+        // group (spills via the external sorter); large-star halves hub
+        // degrees every round, so the buffers shrink geometrically.
+        import org.apache.spark.sql.expressions.Window
+        // large-star: attach every neighbor v > u to min(Γ(u) ∪ {u})
+        val nbrs = edges.select(col("src").as("u"), col("dst").as("v"))
+          .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
+        val large = nbrs
+          .withColumn("m",
+            least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("src"), col("m").as("dst"))
+          .filter(col("src") =!= col("dst"))
+        // small-star: large's output is already oriented big→small
+        // (m = a neighborhood min ≤ u < v); attach the smaller neighbors
+        // AND u itself to the neighborhood min
+        val withM2 = large
+          .select(col("src").as("u"), col("dst").as("v"))
+          .withColumn("m", min(col("v")).over(Window.partitionBy(col("u"))))
+        withM2
+          .select(col("v").as("src"), col("m").as("dst"))
+          .filter(col("src") =!= col("dst"))
+          .unionAll(withM2.select(col("u").as("src"), col("m").as("dst")))
+          .distinct()
+      } { (edges, small) =>
+        // equal cardinality + one-side inclusion ⟹ set equality (both
+        // distinct). left_anti, not except(): both sides are already
+        // distinct, and except() would re-distinct each side (two extra
+        // aggregations per round) before the anti join it compiles to
+        // anyway.
+        val smallCount = small.count()
+        val same = smallCount == edgeCount &&
+          small.join(edges, Seq("src", "dst"), "left_anti").isEmpty
+        edgeCount = smallCount
+        same
+      }
+    val roots = star.select(col("src").as("doc_id"), col("dst").as("cluster_id"))
+    nodes.select(col("doc_id"))
       .join(roots, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-    out
   }
 
   /** The converged (doc_id, cluster_id) labels — the propagation loop
     * shared by [[clusters]] (which emits it directly) and [[keepBest]]
     * (which re-keys clusters to their best-quality member). Returns a
-    * persisted frame (the final round's cache); callers own the entry
-    * per Registry's cache note. */
+    * projection of the final round (persisted, or a cut); callers own
+    * the entry per Registry's cache note. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame = {
       // both edge orientations from ONE pass over the pair plan (a
       // union of two projections would materialize the expensive
@@ -892,59 +902,53 @@ object DedupQueries {
           struct(col("j").as("src"), col("i").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      // `cached` is the persisted frame backing `labels` (labels itself
-      // may be a projection of it — unpersist must target the frame the
-      // cache entry belongs to)
-      var cached = corpus(s, dir)
+      val init = corpus(s, dir)
         .select(col("doc_id"), col("doc_id").as("cluster_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      var labels: DataFrame = cached
-      var converged = false
-      var rounds = 0
-      var sinceRebase = 0
-      while (!converged && rounds < 20) {
+      // `labels` appears twice in each round's plan ⟹ four persisted
+      // rounds between cuts (every round cut regressed r6). The cap: a
+      // graph with diameter > 20 needs the large-star/small-star step.
+      val last = untilStable("clusterLabels", init, maxRounds = 20, uncutRounds = 4) { prev =>
+        // the loop carries the stored round, not this projection of it:
+        // the release must target the frame the cache entry belongs to
+        val labels = prev.select(col("doc_id"), col("cluster_id"))
         val neighborMin = edges
           .join(labels.toDF("dst", "n_label"), Seq("dst"))
           .groupBy(col("src")).agg(min(col("n_label")).as("n_min"))
         // one join carries both the new label AND the changed flag, so
-        // convergence detection costs one filter over the persisted
+        // convergence detection costs one filter over the stored
         // frame instead of a second labels join per round
-        val stepPlan = labels
+        labels
           .join(neighborMin.toDF("doc_id", "n_min"), Seq("doc_id"), "left")
           .select(col("doc_id"), col("cluster_id").as("old_id"),
             least(col("cluster_id"), coalesce(col("n_min"), col("cluster_id")))
               .as("cluster_id"))
-        // `labels` appears twice in each round's plan — periodic
-        // lineage cut (see maybeCutLineage; every round regressed r6)
-        val stepCut = maybeCutLineage(stepPlan, sinceRebase, 4)
-        // persist only the UNCUT rounds (a checkpointed round is
-        // already stored — see starLabels)
-        val step =
-          if (stepCut eq stepPlan) stepCut.persist(StorageLevel.MEMORY_AND_DISK)
-          else stepCut
-        sinceRebase = if (step eq stepPlan) sinceRebase + 1 else 0
-        // full count, not limit(1): every partition of `step` must land in
-        // the cache BEFORE the previous round is dropped, or the next
-        // round recomputes the whole propagation chain from the corpus
-        val changed = step.filter(col("cluster_id") =!= col("old_id"))
-          .count() > 0
-        cached.unpersist()
-        cached = step
-        labels = step.select(col("doc_id"), col("cluster_id"))
-        converged = !changed
-        rounds += 1
-      }
-      // no silent caps: returning mid-propagation labels would split
-      // components without any signal — fail loudly instead (a graph
-      // with diameter > 20 needs the large-star/small-star step)
-      require(converged,
-        s"dedup_clusters: min-label propagation did not converge in $rounds rounds")
-      if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-        System.err.println(s"[clusterLabels] rounds=$rounds")
+      } { (_, step) => step.filter(col("cluster_id") =!= col("old_id")).count() == 0 }
       edges.unpersist()
-      labels
+      last.select(col("doc_id"), col("cluster_id"))
   }
 
+  /** Near-dup CLUSTER resolution: pair lists aren't actionable — a real
+    * dedup pipeline resolves the pair graph into connected components
+    * and keeps one canonical doc per component. Output: (doc_id,
+    * cluster_id = min doc_id of the component), every corpus doc
+    * included (singletons are their own cluster), keeper = doc_id ==
+    * cluster_id.
+    *
+    * Algorithm: iterative min-label propagation over the undirected
+    * pair edges — `label(v) ← min(label(v), min over neighbors
+    * label(u))` until fixpoint. Each round is one broadcast-or-shuffle
+    * join + one groupBy; rounds needed = component diameter, and dup
+    * components are stars/cliques around an original (diameter ≤ 2
+    * here, bounded small on real corpora), so the driver loop runs
+    * 2-3 rounds. For adversarial long-chain graphs swap the step for
+    * large-star/small-star ([[starLabels]], same join-groupBy
+    * primitives, O(log n) rounds). Rounds run on [[untilStable]] with
+    * a lineage cut every 5th round — lineage stays bounded.
+    *
+    * Oracle: DuckDB recursive-CTE transitive closure over the same
+    * pairs + min(reachable) — exact same components (closure is fine at
+    * oracle scale; the Spark side never materializes reachability). */
   val clusters: Q = Q(
     "dedup_clusters",
     (s, dir) => clusterLabels(s, dir),
@@ -1492,8 +1496,8 @@ object DedupQueries {
     * semi-join — all shuffles on the node id; rounds needed = the
     * peeling depth (≤ graph diameter, 2-3 on dup-cluster graphs).
     *
-    * r21: each round CUTS LINEAGE (lazy [[cutLineage]], materialized by
-    * the round's own convergence count — the starLabels discipline).
+    * r21: each round CUTS LINEAGE ([[untilStable]], no uncut rounds: a
+    * lazy [[cutLineage]] materialized by the round's convergence count).
     * The previous shape persisted each round WITHOUT a cut on the
     * claim that "the loop rebuilds from the persisted edge set each
     * round, so plan depth stays linear" — measured FALSE at sf1
@@ -1512,27 +1516,25 @@ object DedupQueries {
   val kcore: Q = Q(
     "graph_kcore",
     (s, dir) => {
-      var edges = cutLineage(ngramPairs(s, dir).select(col("i"), col("j")))
-      var nEdges = edges.count()
-      var converged = nEdges == 0
-      var rounds = 0
-      while (!converged && rounds < CoreRounds) {
-        val deg = edges.select(explode(array(col("i"), col("j"))).as("v"))
-          .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        val alive = deg.filter(col("d") >= CoreK).select(col("v"))
-        val next = cutLineage(edges
-          .join(alive.toDF("i"), Seq("i"), "left_semi")
-          .join(alive.toDF("j"), Seq("j"), "left_semi")
-          .select(col("i"), col("j")))
-        // the count materializes the lazy cut — one job per round
-        val n = next.count()
-        converged = n == nEdges
-        edges = next
-        nEdges = n
-        rounds += 1
-      }
-      require(converged, s"graph_kcore: no fixpoint in $rounds rounds")
-      edges.select(explode(array(col("i"), col("j"))).as("doc_id"))
+      val init = cutLineage(ngramPairs(s, dir).select(col("i"), col("j")))
+      var nEdges = init.count()
+      val core = if (nEdges == 0) init else
+        untilStable("graph_kcore", init, CoreRounds, uncutRounds = 0) { edges =>
+          val deg = edges.select(explode(array(col("i"), col("j"))).as("v"))
+            .groupBy(col("v")).agg(count(lit(1)).as("d"))
+          val alive = deg.filter(col("d") >= CoreK).select(col("v"))
+          edges
+            .join(alive.toDF("i"), Seq("i"), "left_semi")
+            .join(alive.toDF("j"), Seq("j"), "left_semi")
+            .select(col("i"), col("j"))
+        } { (_, next) =>
+          // the count materializes the lazy cut — one job per round
+          val n = next.count()
+          val same = n == nEdges
+          nEdges = n
+          same
+        }
+      core.select(explode(array(col("i"), col("j"))).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("core_deg"))
     },
     Some {
@@ -1558,6 +1560,16 @@ object DedupQueries {
          |GROUP BY v
          |ORDER BY doc_id""".stripMargin
     })
+
+  /** Partitions for a graph query's cut frames, from a count the query
+    * already measured (|V| or |E|), not the session shuffle setting: a
+    * |V|~10^3 dup-cluster graph spread over 32 cached partitions pays
+    * 32-way task dispatch on every round's scans for no parallelism
+    * gain (measured: graph_pagerank 7.3 s at 32 partitions vs 5.3 s at
+    * 8 at sf0.1). ~64k per partition, at least 2, at most the session's
+    * shuffle partitions; grows with the graph at scale. */
+  private def graphParts(s: SparkSession, n: Long): Int =
+    math.max(2, math.min(s.sessionState.conf.numShufflePartitions, (n / 65536L).toInt + 1))
 
   /** Fixed-point scale for PageRank mass: ranks are integers counting
     * trillionths of total probability mass. 10^12 · 85 fits a long with
@@ -1625,25 +1637,17 @@ object DedupQueries {
       // re-optimizing that tree cost more than the old per-round
       // materialization (8.4 s vs 6.5 s at sf0.1); over LogicalRDD
       // leaves reading the warm caches it plans in milliseconds.
-      // Partition count derives from the measured graph, not the session
-      // shuffle setting: a |V|~10^3 dup-cluster graph spread over 32
-      // cached partitions pays 32-way task dispatch on every one of the
-      // 8 rounds' scans for no parallelism gain (measured: the same
-      // query 7.3 s at 32 partitions vs 5.3 s at 8 at sf0.1). ~64k
-      // nodes per partition; grows with the graph at scale.
-      val gParts = math.max(2, math.min(
-        s.sessionState.conf.numShufflePartitions, (n / 65536L).toInt + 1))
       // lazy cut (r21): the terminal job's first scan (the init
       // distinct below) materializes the checkpoint and the old
       // separate checkpoint job folds into the chain job. Later scans
       // usually queue behind the previous round's broadcast, but AQE
       // may run two leaf stages over the cut at once; then both
       // compute it — duplicated work, same result (see cutLineage).
-      val adjCut = cutLineage(adjd.repartition(gParts, col("src")))
-      var ranks = adjCut.select(col("src").as("v")).distinct()
+      val adjCut = cutLineage(adjd.repartition(graphParts(s, n), col("src")))
+      val ranks0 = adjCut.select(col("src").as("v")).distinct()
         .select(col("v"), lit(init).as("r"))
-      for (_ <- 1 to PrRounds) {
-        ranks = adjCut
+      val ranks = (1 to PrRounds).foldLeft(ranks0) { (ranks, _) =>
+        adjCut
           .join(ranks.withColumnRenamed("v", "src"), Seq("src"))
           .select(col("dst").as("v"), expr("r div d").as("c"))
           .groupBy(col("v"))
@@ -1724,14 +1728,12 @@ object DedupQueries {
       .unionAll(e.select(col("j").as("src"), col("i").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val n = adj.select(col("src")).distinct().count()
-    val gParts = math.max(2, math.min(
-      s.sessionState.conf.numShufflePartitions, (n / 65536L).toInt + 1))
     // lazy cut (r21) — same cost condition as pagerank's (cutLineage)
-    val adjCut = cutLineage(adj.repartition(gParts, col("src")))
-    var labels = adjCut.select(col("src").as("v")).distinct()
+    val adjCut = cutLineage(adj.repartition(graphParts(s, n), col("src")))
+    val labels0 = adjCut.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
-    for (_ <- 1 to LpRounds) {
-      labels = adjCut
+    (1 to LpRounds).foldLeft(labels0) { (labels, _) =>
+      adjCut
         .join(labels.withColumnRenamed("v", "dst"), Seq("dst"))
         .groupBy(col("src"), col("lbl"))
         .agg(count(lit(1)).as("c"))
@@ -1740,7 +1742,6 @@ object DedupQueries {
           col("lbl").as("l"))).as("m"))
         .select(col("src").as("v"), col("m.l").as("lbl"))
     }
-    labels
   }
 
   /** Shared oracle CTE chain producing adj, e0 and the LPA labels
@@ -2023,19 +2024,17 @@ object DedupQueries {
     * with per-round persists (no help — the ANALYZED tree still
     * grows; the cut is what matters) vs 7.8 s cut, at sf0.1, reps=3
     * medians — pure analyzer/cache-canonicalization cost on a graph
-    * whose data fits in kilobytes. Partition count derives from the
-    * measured graph like pagerank's, not the session shuffle
-    * setting. Distances are
-    * small integers — nothing floats. Isolated seeds surface at hop
+    * whose data fits in kilobytes. [[graphParts]] sizes the frames
+    * from |E|, the count this query already takes (pagerank and LPA
+    * pass |V|, which here would cost a distinct-count job). Distances
+    * are small integers — nothing floats. Isolated seeds surface at hop
     * 0 (the takedown list itself is part of the report). */
   val bfsReach: Q = Q(
     "graph_bfs_reach",
     (s, dir) => {
       val e = ngramPairs(s, dir).select(col("i"), col("j"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val nE = e.count()
-      val gParts = math.max(2, math.min(
-        s.sessionState.conf.numShufflePartitions, (nE / 65536L).toInt + 1))
+      val gParts = graphParts(s, e.count())
       // the checkpoint is the store; a persist UNDER the cut would be
       // materialized once during checkpointing and never read again.
       // Lazy cuts (r21): the terminal job materializes both leaves —
