@@ -1,47 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.tools.Profile.{Run, Runner}
 object Bench {
-
-  /** Cumulative stop-the-world GC milliseconds across all collectors —
-    * sampled before/after each timed query so every rep carries its own
-    * GC tax on the record (the round-10 verdict's variance ask: read
-    * noise from data, not from re-bisecting adjudicated queries). */
-  private def gcMillis(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-
-  private def heapUsedMb(): Long = {
-    val rt = Runtime.getRuntime
-    (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-  }
-
-  /** Cumulative JIT compilation milliseconds (HotSpot background
-    * compiler threads). A rep whose wall time inflates WITH a large
-    * jit_ms delta is paying the whole-JVM warm-up/deopt mode the r13/r14
-    * sweeps kept re-adjudicating by hand; a flat delta rules it out. */
-  private def jitMillis(): Long = {
-    val b = java.lang.management.ManagementFactory.getCompilationMXBean
-    if (b != null && b.isCompilationTimeMonitoringSupported)
-      b.getTotalCompilationTime
-    else 0L
-  }
-
-  /** Cumulative count of whole-stage-codegen source compilations
-    * (Janino invocations behind CodeGenerator.cache misses). A nonzero
-    * per-rep delta means this rep compiled fresh generated code; zero
-    * means every fragment was a codegen-cache hit. */
-  private def codegenCompiles(): Long =
-    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  /** One timed repetition's full attribution record. */
-  private case class Rep(t: Double, gcMs: Long, heapMb: Long,
-      jitMs: Long, cgen: Long, taskMs: Long, cpuMs: Long) {
-    def json: String =
-      f"""{"t":${t}%.3f,"gc_ms":$gcMs,"jit_ms":$jitMs,"cgen":$cgen,""" +
-        s""""task_ms":$taskMs,"cpu_ms":$cpuMs,"heap_mb":$heapMb}"""
-  }
 
   /** Fixed stage-dense calibration micro-query: 8 chained shuffles
     * (groupBy-sum with a per-round key remap so no two rounds share a
@@ -81,8 +41,8 @@ object Bench {
     * sf10 would spend more wall on probes than on queries. Every run
     * records scan_branches in the output JSON; the ratio half of the
     * window flag applies only when the recorded signature maps carry
-    * this exact (SF, branch-count) shape — a ratio measured at one
-    * shape is not comparable to a signature measured at another. */
+    * this exact (SF, branch-count, cores) shape — a ratio measured at
+    * one shape is not comparable to a signature measured at another. */
   private val ScanProbeBranches =
     sys.env.getOrElse("SPARK_GRAFT_SCAN_BRANCHES", "64").toInt
 
@@ -109,18 +69,19 @@ object Bench {
   }
 
   /** Recorded idle-box scan/stage pole signatures, keyed by (SF-dir
-    * name, scan-probe branch count) — the ratio is only meaningful at
-    * the shape it was measured at (probe cost scales with the sweep's
-    * own lineitem, so big SFs run shorter probes). Input to the
+    * name, scan-probe branch count, SPARK_GRAFT_CPUS) — the ratio is
+    * only meaningful at the shape it was measured at (probe cost scales
+    * with the sweep's own lineitem, so big SFs run shorter probes, and
+    * with the cores the branches spread over). Input to the
     * window_flag's ratio leg: a sweep whose scan/stage ratio moves
     * >10% off the idle signature (and, where one is recorded, >15%
     * off the driver-context signature) ran in a scan-vs-shuffle
     * ASYMMETRIC window (the r17 sweep-3 load shape), so family-level
-    * comparison replaces the headline total. (SF, shape) pairs
-    * without a recorded signature flag on in-sweep calib spread
-    * alone.
+    * comparison replaces the headline total. Shapes without a
+    * recorded signature flag on in-sweep calib spread alone.
     *
-    * Recorded values (BASELINE.md): 64-branch re-anchors (r18) —
+    * Recorded values (BASELINE.md), all local[32]: 64-branch
+    * re-anchors (r18) —
     * sf0.1 = 1.05 (full-registry idle sweep, scan 5.79 / stage 5.50);
     * sf1 = 4.15 (midpoint of the two fresh-JVM d3ext sf1 batches,
     * 4.40 / 3.91 — the batches' own disagreement is ~12%, so the 10%
@@ -129,8 +90,8 @@ object Bench {
     * the committed r18 d3ext sf10 batch records) — sf10 = 1.75
     * (midpoint of 1.852 / 1.653, both batches spread-clean; same ~12%
     * batch disagreement caveat as sf1). */
-  private val IdleScanStageRatio: Map[(String, Int), Double] =
-    Map(("sf0.1", 64) -> 1.05, ("sf1", 64) -> 4.15, ("sf10", 8) -> 1.75)
+  private val IdleScanStageRatio: Map[(String, Int, Int), Double] =
+    Map(("sf0.1", 64, 32) -> 1.05, ("sf1", 64, 32) -> 4.15, ("sf10", 8, 32) -> 1.75)
 
   /** Second recorded pole-shape reference (same keying), labeled
     * "driver" for its PROVENANCE: pinned from BENCH_r18.json (scan
@@ -157,20 +118,18 @@ object Bench {
     * stage-vs-scan asymmetric window makes total/calib-stage
     * incomparable to it (compare per-query raw instead; the two r19
     * sweeps read median 0.95x vs the r18 idle anchors that way). */
-  private val DriverScanStageRatio: Map[(String, Int), Double] =
-    Map(("sf0.1", 64) -> 0.70)
+  private val DriverScanStageRatio: Map[(String, Int, Int), Double] =
+    Map(("sf0.1", 64, 32) -> 0.70)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Session.build(cpus.toInt)
-    // Untimed warmup: JVM/codegen/shuffle-machinery spin-up otherwise
-    // lands entirely on whichever query happens to run first. The second
-    // warmup touches the parquet reader, broadcast-join machinery, and
-    // the regex/string kernels — without it, the alphabetically-first
-    // cartera_load recorded ~6 s vs its ~2 s steady state (round-3
-    // median adjudication).
-    spark.range(2000000).selectExpr("sum(id)").collect()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.build(cpus)
+    // Untimed warmup. The second warmup touches the parquet reader,
+    // broadcast-join machinery, and the regex/string kernels — without
+    // it, the alphabetically-first cartera_load recorded ~6 s vs its
+    // ~2 s steady state (round-3 median adjudication).
+    tools.Profile.warmUp(spark)
     locally {
       import org.apache.spark.sql.functions.broadcast
       val c = spark.read.parquet(s"$sfDir/customer.parquet")
@@ -190,8 +149,7 @@ object Bench {
     // without paying for the whole registry. The driver never sets it.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val named = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
 
     // Sweep structure (r11, verdict task 3): `reps` PASSES over the
     // whole registry, each pass visiting queries in a fresh seeded-
@@ -205,99 +163,35 @@ object Bench {
     // (measured on the 222 shared queries: max rep-spread ratio 9.87x ->
     // 2.15x, median 1.60x -> 1.28x, zero queries above 3x — PERF.md r11). Fixed seed keeps the orders reproducible run-to-run.
     val rng = new scala.util.Random(20260814L)
-    // Per-rep task-time accumulators (executor wall + CPU across all
-    // tasks of the rep): wall >> task_ms/cores with flat jit/cgen/gc
-    // localizes a slow rep OUTSIDE task execution (driver, planning,
-    // listener debris); task_ms up with cpu_ms up means the work itself
-    // ran slower (the decode-tier whole-JVM mode shape).
-    val taskMsAcc = new java.util.concurrent.atomic.AtomicLong
-    val cpuMsAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          taskMsAcc.addAndGet(m.executorRunTime)
-          cpuMsAcc.addAndGet(m.executorCpuTime / 1000000L)
-        }
-      }
-    })
-    val acc = scala.collection.mutable.Map.empty[String, Vector[Rep]]
+    val runner = new Runner(spark, "bench")
+    // Ok runs only, by name (the probes under "calibration" and
+    // "calibration_scan"): a query missing a rep reports -1 below.
+    val acc = scala.collection.mutable.Map.empty[String, Vector[Run]]
+    def keep(r: Run): Unit =
+      if (r.ok) acc.updateWith(r.name)(v => Some(v.getOrElse(Vector.empty) :+ r))
     // Calibration readings: one untimed probe first (its JIT/codegen
     // warm-up must not land on reading #1), then a timed probe before
     // each pass and after the last — reps+1 points bracketing the sweep.
     calibrationProbe(spark)
     scanProbe(spark, sfDir)
-    val calib = scala.collection.mutable.ArrayBuffer.empty[Rep]
-    val calibScan = scala.collection.mutable.ArrayBuffer.empty[Rep]
-    def timedInto(buf: scala.collection.mutable.ArrayBuffer[Rep])(
-        probe: => Unit): Unit = {
-      val gc0 = gcMillis(); val jit0 = jitMillis()
-      val cgen0 = codegenCompiles()
-      val task0 = taskMsAcc.get(); val cpu0 = cpuMsAcc.get()
-      val t0 = System.nanoTime()
-      probe
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      try org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-      catch { case _: java.util.concurrent.TimeoutException => () }
-      buf += Rep(elapsed, gcMillis() - gc0, heapUsedMb(),
-        jitMillis() - jit0, codegenCompiles() - cgen0,
-        taskMsAcc.get() - task0, cpuMsAcc.get() - cpu0)
-      System.gc()
-    }
-    def timedProbe(): Unit = {
-      timedInto(calib)(calibrationProbe(spark))
-      timedInto(calibScan)(scanProbe(spark, sfDir))
+    def timedProbe(rep: Int): Unit = {
+      keep(runner("calibration", rep)(calibrationProbe(spark)))
+      keep(runner("calibration_scan", rep)(scanProbe(spark, sfDir)))
     }
     for (rep <- 1 to reps) {
-      timedProbe()
-      for ((name, fn) <- rng.shuffle(named)) {
+      timedProbe(rep)
+      for (name <- rng.shuffle(named)) {
         // stderr marker so per-query attribution of Spark warnings (e.g.
         // "Broadcasting large task binary") is greppable from a sweep log
         System.err.println(s"[bench] >>> $name rep$rep")
-        val gc0 = gcMillis(); val jit0 = jitMillis()
-        val cgen0 = codegenCompiles()
-        val task0 = taskMsAcc.get(); val cpu0 = cpuMsAcc.get()
-        val t0 = System.nanoTime()
-        val ok =
-          // noop sink, not count(): under count() Catalyst prunes every
-          // unreferenced projection and eliminates the final sort, so a
-          // scan -> expensive-projection -> orderBy query times its row
-          // COUNT, not its work (measured: q1_agg 0.75 s counted vs
-          // 1.59 s actually executed). The noop sink runs the full
-          // physical plan and discards rows at the sink boundary.
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            false
-          }
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        // Task-end events arrive async on the listener bus; drain it
-        // (outside the timed region) so the rep's task_ms/cpu_ms deltas
-        // cover exactly this rep's tasks.
-        try org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
-        catch { case _: java.util.concurrent.TimeoutException => () }
-        val r = Rep(elapsed, gcMillis() - gc0, heapUsedMb(),
-          jitMillis() - jit0, codegenCompiles() - cgen0,
-          taskMsAcc.get() - task0, cpuMsAcc.get() - cpu0)
-        // Cache teardown happens OUTSIDE the timed region — queries that
-        // persist() subtrees must not pay for the drop in their own number.
-        spark.catalog.clearCache()
-        if (ok) acc.updateWith(name) {
-          case Some(v) => Some(v :+ r)
-          case None => Some(Vector(r))
-        }
-        // Between QUERIES (untimed): broadcasts, shuffle dependencies and
-        // localCheckpoint-style blocks release via ContextCleaner, which
-        // only fires on GC — over a 222-query sweep the un-collected
-        // debris (heap + shuffle files on /tmp) otherwise taxes the tail
-        // of the run. An explicit collection here keeps every query's
-        // timed region starting from the same clean slate.
-        System.gc()
+        keep(runner.query(name, rep, sfDir))
       }
     }
-    timedProbe()
-    def medOf(buf: scala.collection.mutable.ArrayBuffer[Rep]): Double = {
-      val ts = buf.map(_.t).sorted
+    timedProbe(reps + 1)
+    val calib = acc.getOrElse("calibration", Vector.empty)
+    val calibScan = acc.getOrElse("calibration_scan", Vector.empty)
+    def medOf(buf: Seq[Run]): Double = {
+      val ts = buf.map(_.secs).sorted
       if (ts.isEmpty) -1.0 else ts((ts.size - 1) / 2)
     }
     val calibMedian = medOf(calib)
@@ -325,8 +219,8 @@ object Bench {
     // this gate detects — including it makes every short fresh-JVM
     // batch cry wolf at ~1.3-1.6x. The full per-rep arrays (with each
     // point's own jit_ms) stay in BENCH_FULL.json regardless.
-    def spreadOf(buf: scala.collection.mutable.ArrayBuffer[Rep]): Double = {
-      val all = buf.map(_.t).filter(_ > 0)
+    def spreadOf(buf: Seq[Run]): Double = {
+      val all = buf.map(_.secs).filter(_ > 0)
       val ts = if (all.size >= 3) all.drop(1) else all
       if (ts.size < 2) -1.0 else ts.max / ts.min
     }
@@ -335,7 +229,7 @@ object Bench {
     val scanStageRatio =
       if (calibMedian > 0 && calibScanMedian > 0) calibScanMedian / calibMedian
       else -1.0
-    val sigKey = (new java.io.File(sfDir).getName, ScanProbeBranches)
+    val sigKey = (new java.io.File(sfDir).getName, ScanProbeBranches, cpus)
     val idleRatio = IdleScanStageRatio.get(sigKey)
     val driverRatio = DriverScanStageRatio.get(sigKey)
     def offBy(ref: Double, tol: Double): Boolean =
@@ -391,12 +285,12 @@ object Bench {
     // milliseconds and post-query heap high-water, so noise
     // adjudication (the box's documented in-sweep swing band) reads
     // from data instead of burning a bisect on a false alarm.
-    val results = named.map { case (name, _) =>
+    val results = named.map { name =>
       val v = acc.getOrElse(name, Vector.empty)
       val spread =
         if (v.size < reps) (-1.0, -1.0, -1.0, -1L, -1L)
         else {
-          val times = v.map(_.t)
+          val times = v.map(_.secs)
           (times.sorted.apply((times.size - 1) / 2), times.min, times.max,
             v.map(_.gcMs).max, v.map(_.heapMb).max)
         }

@@ -1262,9 +1262,7 @@ object SketchQueries {
     * level's hx/hy, so the sequential rebinding of the imperative loop
     * is exactly reproduced. The quadrant term (3·rx)⊕ry is the CASE
     * ladder (0/1/3/2) — no XOR operator needed. */
-  private[graft] def hilbertStageForSpec(s: Int): Seq[String] = hilbertStage(s)
-
-  private def hilbertStage(s: Int): Seq[String] = Seq(
+  private[graft] def hilbertStage(s: Int): Seq[String] = Seq(
     s"""hd + ${s * s} * (CASE WHEN (hx & $s) > 0
        |  THEN CASE WHEN (hy & $s) > 0 THEN 2 ELSE 3 END
        |  ELSE CASE WHEN (hy & $s) > 0 THEN 1 ELSE 0 END END) AS hd""".stripMargin,

@@ -838,7 +838,6 @@ object TemporalJoinQueries {
           col("l_extendedprice"))
       val oOld = ord.filter(col("o_orderdate").cast("date") < lit(cutoff))
       val oNew = ord.filter(col("o_orderdate").cast("date") >= lit(cutoff))
-      val lOld = li.filter(col("l_shipdate").cast("date") < lit(cutoff))
       val lNew = li.filter(col("l_shipdate").cast("date") >= lit(cutoff))
       def proj(o: DataFrame, l: DataFrame, branch: String) =
         o.join(l, col("o_orderkey") === col("l_orderkey"))

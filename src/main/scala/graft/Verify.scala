@@ -11,20 +11,12 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Session.build(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      spark.catalog.clearCache()
-      // Broadcasts, shuffle deps, and lineage-cut RDD blocks release via
-      // ContextCleaner, which only fires on GC — without this, debris
-      // from 160 queries accumulates and taxes the tail of the dump.
-      System.gc()
-    }
+    // The runner logs a failing query as "[verify] <name> failed: ..."
+    // and moves on; it clears caches and GCs between queries.
+    val runner = new tools.Profile.Runner(spark, "verify")
+    for (name <- SparkEntry.queries.keys if only.isEmpty || only(name))
+      runner.query(name, 1, sfDir,
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -131,9 +131,6 @@ object Expressions {
   def parseDateStrict(c: Column, format: String = "M/d/yyyy"): Column =
     try_to_date(c, format)
 
-  /** D3 — normalize timestamp to midnight (dt.normalize()). */
-  def normalizeToMidnight(c: Column): Column = date_trunc("day", c)
-
   /** D4 — date → 'yyyy-MM-dd' string (cartera.py:170,172). */
   def formatDateIso(c: Column): Column = date_format(c, "yyyy-MM-dd")
 

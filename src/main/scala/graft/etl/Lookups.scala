@@ -42,11 +42,6 @@ object Lookups {
       .select(col(nameCol))
       .distinct()
 
-  /** P6 — null-rejection filter (cartera.py:156): drop rows that failed
-    * the lookup, turning the left join into net inner-join semantics. */
-  def dropUnmatched(df: DataFrame, idCol: String): DataFrame =
-    df.filter(col(idCol).isNotNull)
-
   /** J3 — static-map lookup with default (wor2.py:213,330): zone name →
     * id, absent → DEFAULT_ZONE_ID = 1. Constant-folded literal map. */
   def zoneId(zoneName: Column, mapping: Map[String, Int], default: Int = 1): Column =

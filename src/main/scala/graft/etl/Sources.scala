@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sources {
 
-  val TableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Parquet table loader. Columnar scan → Catalyst gets pushdown +
     * pruning for free; `.explain` must show PushedFilters / ReadSchema. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =

@@ -44,12 +44,6 @@ object HashFunctions {
           i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*))))
       .otherwise(array().cast("array<string>"))
 
-  /** DuckDB rendering of [[shingles]] (list_distinct + generate_series). */
-  def shinglesSql(toks: String, n: Int = 3): String = {
-    val parts = (0 until n).map(k => s"$toks[i + $k]").mkString(" || ' ' || ")
-    s"CASE WHEN len($toks) >= $n THEN list_distinct(list_transform(generate_series(1, len($toks) - ${n - 1}), i -> $parts)) ELSE [] END"
-  }
-
   /** Per-token polyHash array — materialize this as its own column
     * before [[shingleHashesFrom]] so each token's characters are folded
     * exactly once (ArrayAggregate has no codegen; re-evaluating the

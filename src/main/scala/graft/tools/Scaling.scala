@@ -20,12 +20,13 @@ package graft.tools
   * sweep, SPARK_GRAFT_SCALING_OUT renames the output file. */
 object Scaling {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALING_REPS", "2").toInt)
     // Session's tmpfs shuffle-dir policy (r16 A/B) holds for BOTH
     // decade sides, so ratios are unaffected by the level.
     val spark = graft.Session.build(cpus.toInt)
-    spark.range(2000000).selectExpr("sum(id)").collect()
+    Profile.warmUp(spark)
+    val runner = new Profile.Runner(spark, "scaling")
 
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_SMALL", "/root/testdata/sf0.01")
     val largeDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_LARGE", "/root/testdata/sf0.1")
@@ -34,22 +35,10 @@ object Scaling {
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
 
     def sweep(sfDir: String): Map[String, Double] =
-      graft.SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-        val times = (1 to reps).flatMap { _ =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[scaling] $name @ $sfDir FAILED: ${e.getMessage}")
-              false
-            }
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          if (ok) Some(dt) else None
-        }
-        System.gc()
+      graft.SparkEntry.queries.keys.toSeq.sorted
+        .filter(name => only.forall(_.contains(name)))
+        .map { name =>
+        val times = (1 to reps).map(runner.query(name, _, sfDir)).filter(_.ok).map(_.secs)
         val med =
           if (times.size < reps) -1.0
           else times.sorted.apply((times.size - 1) / 2)

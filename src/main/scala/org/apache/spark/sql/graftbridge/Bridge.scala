@@ -33,9 +33,10 @@ object Bridge {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Block until the listener bus has delivered every queued event —
-    * lets Bench read its task-metrics accumulators race-free right
-    * after a query's action returns (events are delivered async;
-    * `listenerBus` is private[spark], hence the bridge). */
+    * lets the registry runner (graft.tools.Profile.Runner) read its
+    * listener counts race-free right after a run returns (events are
+    * delivered async; `listenerBus` is private[spark], hence the
+    * bridge). */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 

@@ -32,6 +32,27 @@ class ProfileSpec extends SparkSpec {
       assert((r.jobs, r.stages) == ((jobs, stages)), r.line)
     }
 
+  test("a failing run is recorded, not thrown, and leaks into no other record") {
+    val missing = tools.Profile.run(spark, "/nonexistent/sf", Seq("q1_agg"), reps = 1)
+    assert(missing.map(r => (r.name, r.ok)) == Seq(("q1_agg", false)))
+    assert(missing.head.error.exists(_.nonEmpty), missing.head.line)
+    val runner = new tools.Profile.Runner(spark, "profile")
+    try {
+      // a job that dies in its tasks: its events belong to its own record
+      val died = runner("task_failure", 1)(
+        spark.range(4).rdd.foreach(_ => throw new IllegalStateException("boom")))
+      assert(!died.ok && died.error.exists(_.contains("boom")), died.line)
+      assert(died.jobs == 1, died.line)
+      val r = runner.query("graph_kcore", 1, Sf)
+      assert(r.ok, r.line)
+      assert((r.jobs, r.stages) == ((26, 26)), r.line)
+      for ((k, v) <- Seq("gc_ms" -> r.gcMs, "jit_ms" -> r.jitMs, "cgen" -> r.cgen,
+          "task_ms" -> r.taskMs, "cpu_ms" -> r.cpuMs))
+        assert(v >= 0, s"$k: ${r.json}")
+      assert(r.taskMs > 0, r.json)
+    } finally runner.close()
+  }
+
   test("the spec session carries Session's shipped confs") {
     // spark.sql.extensions, spark.sql.parquet.aggregatePushDown, AQE, ...
     for ((k, v) <- Session.confs(2))

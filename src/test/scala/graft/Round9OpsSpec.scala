@@ -413,7 +413,7 @@ class Round9OpsSpec extends SparkSpec {
         "CAST(0 AS BIGINT) AS hd", "id")
     val viaStages = Seq(128, 64, 32, 16, 8, 4, 2, 1)
       .foldLeft(grid) { (df, s) =>
-        df.selectExpr(("id" +: SketchQueries.hilbertStageForSpec(s)): _*)
+        df.selectExpr(("id" +: SketchQueries.hilbertStage(s)): _*)
       }
       .selectExpr("id", "hd").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
