@@ -1,125 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import graft.tools.Profile.{Run, Runner}
+import graft.tools.Profile
+import graft.tools.Profile.Run
 object Bench {
-
-  /** Fixed stage-dense calibration micro-query: 8 chained shuffles
-    * (groupBy-sum with a per-round key remap so no two rounds share a
-    * partitioning) over an 8M-row `spark.range` — data-independent,
-    * registry-independent, deterministic. The r14/r15 sweeps sat in
-    * box-wide capacity windows (same binary, ~12% total swing, effective
-    * parallelism halved) that each cost a round of prose adjudication;
-    * timing THIS probe at sweep start / between passes / end turns the
-    * window into a number on the record: cross-round totals divide by
-    * the window's measured capacity (BASELINE.md anchor table) instead
-    * of requiring a caveat per round. The probe's shape matches the
-    * stage-dense family the windows inflate most (graph_*,
-    * dedup_clusters*: many short shuffle stages, little scan). */
-  private def calibrationProbe(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions._
-    var df = spark.range(0L, 8000000L, 1L, 32)
-      .select((col("id") % 1000003L).as("k"), col("id").as("v"))
-    for (i <- 1 to 8)
-      df = df.groupBy(col("k")).agg(sum(col("v")).as("v"))
-        .select(((col("k") * 48271L + lit(i)) % 1000003L).as("k"), col("v"))
-    df.agg(sum(col("v"))).collect()
-  }
-
-  /** Number of independent lineitem scan branches in scanProbe. r17 ran
-    * 8 (~1 s at sf0.1), and BASELINE.md recorded ±12% wobble on that
-    * median — one slow rep moves it. r18 (verdict task 4) lengthens the
-    * probe to ~4 s at sf0.1, same shape, so a single slow segment is
-    * amortized inside the run instead of owning a probe point. 64, not
-    * 24: at local[32] extra branches largely ADD PARALLELISM until the
-    * cores saturate (a 24-branch probe measured only 1.5x the 8-branch
-    * wall time in the r18 sweep-1 record), so hitting the 3-4 s target
-    * takes 8x the branches, not 4x.
-    *
-    * Env-overridable (SPARK_GRAFT_SCAN_BRANCHES) because the probe's
-    * cost scales with the sweep's OWN lineitem: 64 branches is ~4 s at
-    * sf0.1 but ~23 s at sf1 and ~4 min at sf10 — a decade batch at
-    * sf10 would spend more wall on probes than on queries. Every run
-    * records scan_branches in the output JSON; the ratio half of the
-    * window flag applies only when the recorded signature maps carry
-    * this exact (SF, branch-count, cores) shape — a ratio measured at
-    * one shape is not comparable to a signature measured at another. */
-  private val ScanProbeBranches =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_BRANCHES", "64").toInt
-
-  /** Fixed scan-dense calibration probe, the stage-dense probe's
-    * opposite pole (r16 verdict task 3: the stage-dense probe and the
-    * mixed registry normalized ~15% apart across contexts because a
-    * window can hit scans and shuffles differently — two probes turn
-    * "which kind of window is this" into data). Shape:
-    * ScanProbeBranches independent full scans of the sweep's own
-    * lineitem parquet, each hashing every column per row, aggregated
-    * with ZERO wide stages — parquet decode + per-row CPU, no shuffle.
-    * Deterministic given the fixture; cross-context comparisons at the
-    * same SF are exactly the use case. */
-  private def scanProbe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    // Per-branch hash seed keeps the branches from being collapsed by
-    // plan dedup; DOUBLE aggregation because summing raw xxhash64 longs
-    // overflows under ANSI mode.
-    (1 to ScanProbeBranches).map(i => li.select(
-        xxhash64(lit(i) +: li.columns.map(col): _*).cast("double").as("h")))
-      .reduce(_ unionAll _)
-      .agg(sum(col("h"))).collect()
-  }
-
-  /** Recorded idle-box scan/stage pole signatures, keyed by (SF-dir
-    * name, scan-probe branch count, SPARK_GRAFT_CPUS) — the ratio is
-    * only meaningful at the shape it was measured at (probe cost scales
-    * with the sweep's own lineitem, so big SFs run shorter probes, and
-    * with the cores the branches spread over). Input to the
-    * window_flag's ratio leg: a sweep whose scan/stage ratio moves
-    * >10% off the idle signature (and, where one is recorded, >15%
-    * off the driver-context signature) ran in a scan-vs-shuffle
-    * ASYMMETRIC window (the r17 sweep-3 load shape), so family-level
-    * comparison replaces the headline total. Shapes without a
-    * recorded signature flag on in-sweep calib spread alone.
-    *
-    * Recorded values (BASELINE.md), all local[32]: 64-branch
-    * re-anchors (r18) —
-    * sf0.1 = 1.05 (full-registry idle sweep, scan 5.79 / stage 5.50);
-    * sf1 = 4.15 (midpoint of the two fresh-JVM d3ext sf1 batches,
-    * 4.40 / 3.91 — the batches' own disagreement is ~12%, so the 10%
-    * flag band at sf1 is tight by construction and a flagged sf1 run
-    * means "compare per-family", not "discard"). 8-branch (r19, from
-    * the committed r18 d3ext sf10 batch records) — sf10 = 1.75
-    * (midpoint of 1.852 / 1.653, both batches spread-clean; same ~12%
-    * batch disagreement caveat as sf1). */
-  private val IdleScanStageRatio: Map[(String, Int, Int), Double] =
-    Map(("sf0.1", 64, 32) -> 1.05, ("sf1", 64, 32) -> 4.15, ("sf10", 8, 32) -> 1.75)
-
-  /** Second recorded pole-shape reference (same keying), labeled
-    * "driver" for its PROVENANCE: pinned from BENCH_r18.json (scan
-    * 4.42 / stage 6.30 = 0.702), the driver-context sweep, because
-    * holding driver sweeps to the idle ratio made every BENCH_rN
-    * carry a permanently-true flag that reads as noise (r18 verdict,
-    * What's wrong item 1). Band ±15% (vs ±10% idle). Confirmed by the
-    * second driver-context reading, BENCH_r19.json (scan 4.51 / stage
-    * 6.17 = 0.731, inside the band) — two independent driver sweeps
-    * at 0.702 / 0.731, so the pin is no longer provisional; the 0.70
-    * center stays (midpoint 0.72 is within 3% of it, not worth a
-    * re-key).
-    *
-    * IMPORTANT (r19 finding, BASELINE.md): the label is provenance,
-    * not causation. The first two r19 IDLE sweeps matched this
-    * reference (ratio 0.789 / 0.787 — a fast-scan window: scan probe
-    * 4.05-4.21 s vs the r18 idle 4.65-5.79, stage probe flat), so a
-    * ~0.7-0.8 ratio is a window SHAPE the box can show in any
-    * context. Operationally: `ratio_match` names the recorded shape
-    * the sweep ran in; matching ANY recorded shape is unflagged
-    * (known window, measurements valid), but only
-    * `ratio_match:"idle"` sweeps are ANCHOR-ELIGIBLE — the 68-74
-    * index band was measured at the balanced shape, and a
-    * stage-vs-scan asymmetric window makes total/calib-stage
-    * incomparable to it (compare per-query raw instead; the two r19
-    * sweeps read median 0.95x vs the r18 idle anchors that way). */
-  private val DriverScanStageRatio: Map[(String, Int, Int), Double] =
-    Map(("sf0.1", 64, 32) -> 0.70)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -129,7 +11,7 @@ object Bench {
     // broadcast-join machinery, and the regex/string kernels — without
     // it, the alphabetically-first cartera_load recorded ~6 s vs its
     // ~2 s steady state (round-3 median adjudication).
-    tools.Profile.warmUp(spark)
+    Profile.warmUp(spark)
     locally {
       import org.apache.spark.sql.functions.broadcast
       val c = spark.read.parquet(s"$sfDir/customer.parquet")
@@ -150,151 +32,42 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val named = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
+    val runs = Profile.sweep(new Profile.Runner(spark, "bench"), sfDir, named, reps)
+    // a filtered dev run must not clobber the committed full-registry
+    // detail file with a partial one — it writes the same detail to the
+    // uncommitted BENCH_ONLY.json instead, so isolated adjudication runs
+    // get the per-rep attribution records too
+    val detailPath = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_ONLY.json"
+    val (line, full) = report(runs, reps, sfDir, detailPath)
+    try {
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(detailPath),
+        full.getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $detailPath write failed: ${e.getMessage}")
+    }
+    println(line)
+    spark.stop()
+  }
 
-    // Sweep structure (r11, verdict task 3): `reps` PASSES over the
-    // whole registry, each pass visiting queries in a fresh seeded-
-    // random order — instead of the old back-to-back reps in sorted
-    // order. The r10 spread data showed 3-10x same-build rep spreads
-    // concentrated on whichever queries followed heavy neighbors;
-    // consecutive-rep timing couples all reps of a query to ONE
-    // neighborhood, so the median inherits the neighborhood, not the
-    // query. Randomizing per pass decorrelates: each rep sees a
-    // different predecessor, and the median absorbs the context lottery
-    // (measured on the 222 shared queries: max rep-spread ratio 9.87x ->
-    // 2.15x, median 1.60x -> 1.28x, zero queries above 3x — PERF.md r11). Fixed seed keeps the orders reproducible run-to-run.
-    val rng = new scala.util.Random(20260814L)
-    val runner = new Runner(spark, "bench")
-    // Ok runs only, by name (the probes under "calibration" and
-    // "calibration_scan"): a query missing a rep reports -1 below.
-    val acc = scala.collection.mutable.Map.empty[String, Vector[Run]]
-    def keep(r: Run): Unit =
-      if (r.ok) acc.updateWith(r.name)(v => Some(v.getOrElse(Vector.empty) :+ r))
-    // Calibration readings: one untimed probe first (its JIT/codegen
-    // warm-up must not land on reading #1), then a timed probe before
-    // each pass and after the last — reps+1 points bracketing the sweep.
-    calibrationProbe(spark)
-    scanProbe(spark, sfDir)
-    def timedProbe(rep: Int): Unit = {
-      keep(runner("calibration", rep)(calibrationProbe(spark)))
-      keep(runner("calibration_scan", rep)(scanProbe(spark, sfDir)))
-    }
-    for (rep <- 1 to reps) {
-      timedProbe(rep)
-      for (name <- rng.shuffle(named)) {
-        // stderr marker so per-query attribution of Spark warnings (e.g.
-        // "Broadcasting large task binary") is greppable from a sweep log
-        System.err.println(s"[bench] >>> $name rep$rep")
-        keep(runner.query(name, rep, sfDir))
-      }
-    }
-    timedProbe(reps + 1)
-    val calib = acc.getOrElse("calibration", Vector.empty)
-    val calibScan = acc.getOrElse("calibration_scan", Vector.empty)
-    def medOf(buf: Seq[Run]): Double = {
-      val ts = buf.map(_.secs).sorted
-      if (ts.isEmpty) -1.0 else ts((ts.size - 1) / 2)
-    }
-    val calibMedian = medOf(calib)
-    val calibScanMedian = medOf(calibScan)
-    // Sweep validity gate (r17 verdict task 1, automated from the prose
-    // rule in BASELINE.md): sweep 5 of r17 straddled a drifting window
-    // (in-sweep stage-calib max/min 1.33×) and its probe-median index
-    // overshot the idle anchor by ~11%; the committed record carried no
-    // machine-readable trace. Emit the in-sweep spread of both probes,
-    // the scan/stage pole ratio, and an explicit window_flag so a
-    // window-straddling sweep can never be silently committed as an
-    // anchor. Flag fires when the stage-probe spread is >= 1.3 (the
-    // sweep-5 failure shape) or the pole ratio matches neither the
-    // idle (±10%) nor the driver-context (±15%) signature recorded
-    // for this (SF, probe-shape) — a scan-vs-shuffle asymmetric
-    // window, where family-level comparison replaces the headline
-    // total. Since r19 the two reasons are emitted separately
-    // (flag_reasons) because they demand different responses: a
-    // spread flag invalidates the sweep's own index (re-run); a
-    // ratio flag only demotes the headline total to per-family.
-    // The spread EXCLUDES the first timed probe point when 3+ points
-    // exist: point 1 routinely carries attributable JIT warm-up (r18
-    // batch data: stage jit_ms 8359 on point 1 vs 2795 by point 3, scan
-    // 41264 vs 16600), which is a JVM transient, not the window drift
-    // this gate detects — including it makes every short fresh-JVM
-    // batch cry wolf at ~1.3-1.6x. The full per-rep arrays (with each
-    // point's own jit_ms) stay in BENCH_FULL.json regardless.
-    def spreadOf(buf: Seq[Run]): Double = {
-      val all = buf.map(_.secs).filter(_ > 0)
-      val ts = if (all.size >= 3) all.drop(1) else all
-      if (ts.size < 2) -1.0 else ts.max / ts.min
-    }
-    val calibSpread = spreadOf(calib)
-    val calibScanSpread = spreadOf(calibScan)
-    val scanStageRatio =
-      if (calibMedian > 0 && calibScanMedian > 0) calibScanMedian / calibMedian
-      else -1.0
-    val sigKey = (new java.io.File(sfDir).getName, ScanProbeBranches, cpus)
-    val idleRatio = IdleScanStageRatio.get(sigKey)
-    val driverRatio = DriverScanStageRatio.get(sigKey)
-    def offBy(ref: Double, tol: Double): Boolean =
-      math.abs(scanStageRatio / ref - 1.0) > tol
-    // Two flag reasons with different meanings (r18 verdict, What's
-    // wrong item 1): "spread" = the window drifted DURING the sweep
-    // (the r17-sweep-5 / r18-sweep-3 estimator failure) — the
-    // normalized index itself is invalid, hard stop; "ratio" = the
-    // window's pole signature matches NEITHER the idle nor the
-    // driver-provenance record — an asymmetric window of UNRECORDED
-    // shape, so family-level comparison replaces the headline total
-    // (not a discard). A sweep matching a recorded shape is a known
-    // window, not an anomaly — but only the idle-balanced shape is
-    // anchor-eligible (see DriverScanStageRatio scaladoc).
-    val spreadReason = calibSpread >= 1.3
-    val ratioReason = scanStageRatio > 0 &&
-      (idleRatio.nonEmpty || driverRatio.nonEmpty) &&
-      idleRatio.forall(offBy(_, 0.10)) && driverRatio.forall(offBy(_, 0.15))
-    val ratioMatch =
-      if (scanStageRatio <= 0 || (idleRatio.isEmpty && driverRatio.isEmpty))
-        "null"
-      else if (idleRatio.exists(!offBy(_, 0.10))) "\"idle\""
-      else if (driverRatio.exists(!offBy(_, 0.15))) "\"driver\""
-      else "\"none\""
-    val windowFlag = spreadReason || ratioReason
-    val flagReasons =
-      ((if (spreadReason) List("\"spread\"") else Nil) :::
-        (if (ratioReason) List("\"ratio\"") else Nil))
-        .mkString("[", ",", "]")
-    // Machine-readable anchor eligibility (r19 ADVICE): the rule
-    // "flags empty AND ratio_match == idle" lived only in docs, so a
-    // consumer keying off window_flag alone could anchor a
-    // driver-shaped sweep (window_flag is false for any sweep matching
-    // a recorded shape, including the non-anchorable 0.70 one). Emit
-    // the conjunction itself so no reader has to re-derive it.
-    val anchorEligible = !windowFlag && ratioMatch == "\"idle\""
-    def fr(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val gateFields =
-      s""""calib_spread":${fr(calibSpread)},""" +
-      s""""calib_scan_spread":${fr(calibScanSpread)},""" +
-      s""""scan_stage_ratio":${fr(scanStageRatio)},""" +
-      s""""scan_branches":$ScanProbeBranches,""" +
-      s""""idle_ratio_ref":${idleRatio.map(fr).getOrElse("null")},""" +
-      s""""driver_ratio_ref":${driverRatio.map(fr).getOrElse("null")},""" +
-      s""""ratio_match":$ratioMatch,""" +
-      s""""window_flag":$windowFlag,""" +
-      s""""flag_reasons":$flagReasons,""" +
-      s""""anchor_eligible":$anchorEligible,"""
-    // A failed query must not masquerade as a fast one: report -1.
-    // Lower median for even rep counts — the conservative index that
-    // is an actual observed timing. The full (median, min, max)
-    // spread goes to BENCH_FULL.json, now beside each rep's own GC
-    // milliseconds and post-query heap high-water, so noise
-    // adjudication (the box's documented in-sweep swing band) reads
-    // from data instead of burning a bisect on a false alarm.
-    val results = named.map { name =>
-      val v = acc.getOrElse(name, Vector.empty)
+  /** Bench's report over a sweep's runs (failed ones included): the
+    * stdout line and the JSON of the detail file at `detailPath`, with
+    * one entry per query name in name order. */
+  def report(runs: Seq[Run], reps: Int, sfDir: String,
+      detailPath: String): (String, String) = {
+    // A failed query must not masquerade as a fast one: its median is -1
+    // (Profile.median). The full (median, min, max) spread goes to the
+    // detail file beside each rep's own GC milliseconds and post-query
+    // heap high-water, so noise adjudication (the box's documented
+    // in-sweep swing band) reads from data instead of burning a bisect
+    // on a false alarm.
+    val results = runs.groupBy(_.name).toSeq.sortBy(_._1).map { case (name, rs) =>
+      val v = rs.filter(_.ok)
+      val med = Profile.median(rs, reps)
       val spread =
-        if (v.size < reps) (-1.0, -1.0, -1.0, -1L, -1L)
-        else {
-          val times = v.map(_.secs)
-          (times.sorted.apply((times.size - 1) / 2), times.min, times.max,
-            v.map(_.gcMs).max, v.map(_.heapMb).max)
-        }
-      (name, spread, v)
+        if (med < 0) (-1.0, -1.0, -1L, -1L)
+        else (v.map(_.secs).min, v.map(_.secs).max, v.map(_.gcMs).max, v.map(_.heapMb).max)
+      (name, med, spread, v)
     }
     // The harness that records this line keeps only the LAST 2000
     // characters of stdout; with 77+ registered queries even 2-decimal
@@ -310,19 +83,19 @@ object Bench {
     // gates cross-round total comparisons — excluding a failing query
     // silently LOWERS the total, so a regression would read as a win
     // to anyone comparing totals without scanning every sentinel
-    val failed = results.filter(_._2._1 < 0).map(_._1)
-    // stdout line is size-capped (take 10); BENCH_FULL.json is documented
+    val failed = results.filter(_._2 < 0).map(_._1)
+    // stdout line is size-capped (take 10); the detail file is documented
     // as the complete detail, so it gets the UNtruncated failure list
     val failedNames =
       failed.take(10).map("\"" + _ + "\"").mkString("[", ",", "]")
     val failedNamesFull =
       failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
-    // BENCH_FULL carries the full per-rep spread PLUS each rep's own
+    val total = results.map(_._2).filter(_ >= 0).sum
+    // The detail file carries the full per-rep spread PLUS each rep's own
     // attribution record (wall, gc, jit, codegen compiles, task wall/cpu,
     // heap) — so a whole-JVM sweep mode reads off the data (r14 verdict
     // task 2: modes become attributable instead of re-adjudicated).
-    val allQs = results.map { case (k, (med, mn, mx, gcMax, heapMax), v) =>
+    val allQs = results.map { case (k, med, (mn, mx, gcMax, heapMax), v) =>
         s"\"" + k + s"""":{"median":${f3(med)},"min":${f3(mn)},"max":${f3(mx)},""" +
           s""""gc_max_ms":$gcMax,"heap_after_max_mb":$heapMax,""" +
           s""""reps":${v.map(_.json).mkString("[", ",", "]")}}"""
@@ -332,35 +105,15 @@ object Bench {
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,""" +
       s""""order":"seeded-random-per-pass","n_queries":${results.size},"failed":${failed.size},""" +
       s""""failed_queries":$failedNamesFull,"sf":"$sfDir",""" +
-      s""""calib_median":${f3(calibMedian)},""" +
-      s""""calib_scan_median":${f3(calibScanMedian)},""" +
-      gateFields +
-      s""""calibration":${calib.map(_.json).mkString("[", ",", "]")},""" +
-      s""""calibration_scan":${calibScan.map(_.json).mkString("[", ",", "]")},""" +
       s""""queries":$allQs}"""
-    // a filtered dev run must not clobber the committed full-registry
-    // detail file with a partial one — it writes the same detail to the
-    // uncommitted BENCH_ONLY.json instead, so isolated adjudication runs
-    // get the per-rep attribution records too
-    val detailPath = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_ONLY.json"
-    try {
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(detailPath),
-        full.getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] $detailPath write failed: ${e.getMessage}")
-    }
-    val slowest = results.filter(_._2._1 >= 0).sortBy(-_._2._1).take(15)
-      .map { case (k, (med, _, _, _, _), _) => s"\"" + k + "\":" + f3(med) }
+    val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(15)
+      .map { case (k, med, _, _) => s"\"" + k + "\":" + f3(med) }
       .mkString("{", ",", "}")
-    println(
+    val line =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","reps":$reps,""" +
       s""""n_queries":${results.size},"failed":${failed.size},""" +
       s""""failed_queries":$failedNames,"detail":"$detailPath",""" +
-      s""""calib_median":${f3(calibMedian)},""" +
-      s""""calib_scan_median":${f3(calibScanMedian)},""" +
-      gateFields +
-      s""""queries":$slowest,"sf":"$sfDir"}""")
-    spark.stop()
+      s""""queries":$slowest,"sf":"$sfDir"}"""
+    (line, full)
   }
 }

@@ -802,8 +802,6 @@ object DedupQueries {
       rounds += 1
     }
     require(converged, s"$name: no fixpoint in $rounds rounds")
-    if (sys.env.contains("SPARK_GRAFT_DEBUG"))
-      System.err.println(s"[$name] rounds=$rounds")
     prev
   }
 

@@ -13,12 +13,14 @@ object EtlQueries {
   private def ddbClean(x: String): String =
     s"trim(regexp_replace(regexp_replace(lower(trim($x)), '[^a-z0-9\\s]', '', 'g'), '\\s+', ' ', 'g'))"
 
-  /** Shared DuckDB fragment: the synthesized messy cartera report (must
-    * stay in lockstep with pipelines.Cartera.rawFact). */
-  private val ddbMoney =
-    "format('{:,}', CAST(floor(o.o_totalprice) AS BIGINT)) || '.' || " +
-      "lpad(CAST(CAST(round((o.o_totalprice - floor(o.o_totalprice)) * 100) AS BIGINT) AS VARCHAR), 2, '0')"
+  /** Shared DuckDB fragment: the fixtures' money string (must stay in
+    * lockstep with etl.Sources.money). */
+  private def ddbMoney(col: String): String =
+    s"format('{:,}', CAST(floor($col) AS BIGINT)) || '.' || " +
+      s"lpad(CAST(CAST(round(($col - floor($col)) * 100) AS BIGINT) AS VARCHAR), 2, '0')"
 
+  /** The synthesized messy cartera report (must stay in lockstep with
+    * pipelines.Cartera.rawFact). */
   private val ddbRawFact =
     s"""SELECT
        |  CASE WHEN o.o_orderkey % 101 = 0 THEN 'Walmart'
@@ -33,8 +35,8 @@ object EtlQueries {
        |  CAST(o.o_orderkey AS VARCHAR) AS document_number,
        |  strftime(o.o_orderdate + INTERVAL 30 DAY, '%-m/%-d/%Y') AS fecha_pago_raw,
        |  CASE WHEN o.o_orderkey % 113 = 0 THEN 'N/A'
-       |       WHEN o.o_orderstatus = 'F' THEN '($$' || $ddbMoney || ')'
-       |       ELSE '$$' || $ddbMoney END AS open_balance_raw
+       |       WHEN o.o_orderstatus = 'F' THEN '($$' || ${ddbMoney("o.o_totalprice")} || ')'
+       |       ELSE '$$' || ${ddbMoney("o.o_totalprice")} END AS open_balance_raw
        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey""".stripMargin
 
   private val ddbEnriched =
@@ -101,15 +103,11 @@ object EtlQueries {
 
   private val ddbRid = "(l.l_orderkey * 8 + l.l_linenumber)"
 
-  private def ddbLineMoney(col: String): String =
-    s"format('{:,}', CAST(floor($col) AS BIGINT)) || '.' || " +
-      s"lpad(CAST(CAST(round(($col - floor($col)) * 100) AS BIGINT) AS VARCHAR), 2, '0')"
-
   private val ddbPendingRaw =
     s"""SELECT
        |  CASE WHEN $ddbRid % 97 = 0 THEN 'ghost buyer ' || CAST($ddbRid AS VARCHAR)
        |       ELSE '  ' || upper(c.c_name) || '!  ' END AS nombre_cliente,
-       |  '$$' || ${ddbLineMoney("l.l_extendedprice")} AS amount_raw,
+       |  '$$' || ${ddbMoney("l.l_extendedprice")} AS amount_raw,
        |  'PO-' || lpad(CAST(l.l_orderkey AS VARCHAR), 10, '0') || '-' ||
        |    CAST(l.l_linenumber AS VARCHAR) || '-EXPORTED' AS document_number_raw,
        |  CASE WHEN $ddbRid % 111 = 0 THEN 'INVALID'
@@ -191,7 +189,7 @@ object EtlQueries {
        |  l.l_quantity AS cantidad_producto,
        |  'EA' AS presentacion,
        |  CASE WHEN $ddbRid % 113 = 0 THEN 'n/a'
-       |       ELSE '$$' || ${ddbLineMoney("l.l_extendedprice")} END AS amount_raw,
+       |       ELSE '$$' || ${ddbMoney("l.l_extendedprice")} END AS amount_raw,
        |  'Sales Order #' || CAST(l.l_orderkey AS VARCHAR) AS created_from,
        |  l.l_shipdate AS __ship,
        |  $ddbRid AS __rid

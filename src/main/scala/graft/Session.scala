@@ -58,7 +58,7 @@ object Session {
   /** Shuffle/spill directory: tmpfs when the box has one (r16 A/B,
     * PERF.md: the stage-dense family — graph_*, dedup_clusters*,
     * keep_best — runs 0.69x total with shuffle files on /dev/shm vs the
-    * shared virtio /tmp, per-query 0.52-0.76x, and the calibration
+    * shared virtio /tmp, per-query 0.52-0.76x, and the r16 stage-dense
     * probe's rep spread collapses from 4.49-5.76 s to 4.27-4.36 s: the
     * disk was both a tax and a noise source). On a real cluster this is
     * the standard fast-local-storage shuffle-dir practice; at these

@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{concat, floor, format_number, lit, lpad, round}
 
 /** Source layer — SURVEY.md §2.1.
   *
@@ -41,6 +42,14 @@ object Sources {
     * scan is under half the session's parallelism. */
   private[graft] def needScatter(parts: Int, want: Int): Boolean =
     parts * 2 < want
+
+  /** The fixtures' report-style money string, `1,234.56`, from a
+    * 2-decimal amount (no currency sign). The DuckDB oracles build the
+    * same string with `EtlQueries.ddbMoney`; the two must stay in
+    * lockstep. */
+  def money(amount: Column): Column =
+    concat(format_number(floor(amount).cast("long"), 0), lit("."),
+      lpad(round((amount - floor(amount)) * 100).cast("long").cast("string"), 2, "0"))
 
   /** `events` loader, adaptive to the two `ts` layouts the driver has
     * shipped: parquet TIMESTAMP(NANOS) (surfaced as a nanos long under

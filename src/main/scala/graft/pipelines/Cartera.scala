@@ -36,11 +36,7 @@ object Cartera {
       Sources.table(spark, sfDir, "orders"), col("o_orderkey"))
     val cust = Sources.table(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-    val moneyInt = format_number(floor(col("o_totalprice")).cast("long"), 0)
-    val moneyFrac = lpad(
-      round((col("o_totalprice") - floor(col("o_totalprice"))) * 100)
-        .cast("long").cast("string"), 2, "0")
-    val money = concat(moneyInt, lit("."), moneyFrac)
+    val money = Sources.money(col("o_totalprice"))
     orders
       .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"))
       .select(

@@ -35,10 +35,6 @@ object PendingOrders {
       .select(col("c_custkey"), col("c_name"))
     val part = Sources.table(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_type"))
-    val moneyInt = format_number(floor(col("l_extendedprice")).cast("long"), 0)
-    val moneyFrac = lpad(
-      round((col("l_extendedprice") - floor(col("l_extendedprice"))) * 100)
-        .cast("long").cast("string"), 2, "0")
     li.join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
@@ -46,7 +42,7 @@ object PendingOrders {
         when(rid % 97 === 0, concat(lit("ghost buyer "), rid.cast("string")))
           .otherwise(concat(lit("  "), upper(col("c_name")), lit("!  ")))
           .as("Customer "),
-        concat(lit("$"), moneyInt, lit("."), moneyFrac).as("Amount (Net) "),
+        concat(lit("$"), Sources.money(col("l_extendedprice"))).as("Amount (Net) "),
         concat(lit("PO-"), lpad(col("l_orderkey").cast("string"), 10, "0"),
           lit("-"), col("l_linenumber").cast("string"), lit("-EXPORTED"))
           .as("Document Number "),

@@ -37,10 +37,6 @@ object VentasTotales {
       .select(col("c_custkey"), col("c_name"))
     val part = Sources.table(spark, sfDir, "part")
       .select(col("p_partkey"), col("p_name"), col("p_brand"), col("p_type"))
-    val moneyInt = format_number(floor(col("l_extendedprice")).cast("long"), 0)
-    val moneyFrac = lpad(
-      round((col("l_extendedprice") - floor(col("l_extendedprice"))) * 100)
-        .cast("long").cast("string"), 2, "0")
     val base = li
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
@@ -58,7 +54,7 @@ object VentasTotales {
         col("l_quantity").as("Quantity"),
         lit("EA").as("UOM"),
         when(rid % 113 === 0, lit("n/a"))
-          .otherwise(concat(lit("$"), moneyInt, lit("."), moneyFrac))
+          .otherwise(concat(lit("$"), Sources.money(col("l_extendedprice"))))
           .as("Amount"),
         concat(lit("Sales Order #"), col("l_orderkey").cast("string"))
           .as("Created From"),

@@ -7,10 +7,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** The registry runner. [[Profile.Runner]] is the one code path that runs
-  * a registry query (or a Bench calibration probe) and measures it:
-  * Bench, Verify, Scaling and this profiler all go through it, so they
-  * share one timed region, one listener, one failure policy, one cleanup
-  * order and one record ([[Profile.Run]]).
+  * a registry query and measures it: Bench, Verify, Scaling and this
+  * profiler all go through it, so they share one timed region, one
+  * listener, one failure policy, one cleanup order and one record
+  * ([[Profile.Run]]). [[Profile.sweep]] is the one multi-rep registry
+  * sweep (Bench and Scaling), [[Profile.median]] its one summary.
   *
   * `main` is the per-query dispatch profile under the shipped session:
   * wall seconds, Spark job count, completed-stage count and executor
@@ -97,7 +98,7 @@ object Profile {
     * (driver, planning, listener debris); task_ms up with cpu_ms up
     * means the work itself ran slower. Failures are logged to stderr as
     * `[tag] name failed: message`. `close` detaches the listener. */
-  final class Runner(spark: SparkSession, tag: String) {
+  final class Runner(spark: SparkSession, val tag: String) {
     private val jobs, stages, taskMs, cpuMs = new AtomicLong
     private val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -139,11 +140,15 @@ object Profile {
         taskMs.get() - task0, cpuMs.get() - cpu0, gcMillis() - gc0,
         jitMillis() - jit0, codegenCompiles() - cgen0, heapUsedMb())
       // Untimed: a query that persist()s subtrees must not pay for the
-      // drop in its own number. Broadcasts, shuffle dependencies and
-      // lineage-cut blocks release via ContextCleaner, which only fires
-      // on GC; collecting here keeps every run starting from the same
-      // clean slate instead of the tail of a sweep paying for the debris.
+      // drop in its own number. clearCache() does not reach lineage cuts:
+      // a localCheckpoint is a persisted RDD, not a cache entry, so the
+      // cuts the graph loops keep (and each loop's final one) are
+      // released here by hand. Broadcasts and shuffle dependencies
+      // release via ContextCleaner, which only fires on GC; collecting
+      // here keeps every run starting from the same clean slate instead
+      // of the tail of a sweep paying for the debris.
       spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
       System.gc()
       r
     }
@@ -154,6 +159,37 @@ object Profile {
       apply(name, rep)(sink(graft.SparkEntry.queries(name)(spark, sfDir)))
 
     def close(): Unit = spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The registry sweep: `reps` passes over `names`, each pass in a fresh
+    * seeded-random order, every run into the noop sink. Returns every run,
+    * failed ones included, in run order.
+    *
+    * Passes, not back-to-back reps: the r10 spread data showed 3-10x
+    * same-build rep spreads concentrated on whichever queries followed
+    * heavy neighbors, and consecutive reps couple every rep of a query to
+    * ONE neighborhood, so the median inherits the neighborhood, not the
+    * query. A fresh order per pass gives each rep a different
+    * predecessor (measured on 222 queries: max rep-spread ratio 9.87x ->
+    * 2.15x, median 1.60x -> 1.28x — PERF.md r11). The fixed seed keeps
+    * the orders reproducible run-to-run. */
+  def sweep(runner: Runner, sfDir: String, names: Seq[String], reps: Int): Seq[Run] = {
+    val rng = new scala.util.Random(20260814L)
+    for (rep <- 1 to reps; name <- rng.shuffle(names)) yield {
+      // stderr marker so per-query attribution of Spark warnings (e.g.
+      // "Broadcasting large task binary") is greppable from a sweep log
+      System.err.println(s"[${runner.tag}] >>> $name rep$rep")
+      runner.query(name, rep, sfDir)
+    }
+  }
+
+  /** One query's summary over `reps` reps: the lower median of its ok
+    * runs' wall seconds, or -1 when a rep failed — a failed query must
+    * not masquerade as a fast one. The lower median for an even count is
+    * the conservative index that is an actual observed timing. */
+  def median(runs: Seq[Run], reps: Int): Double = {
+    val ts = runs.filter(_.ok).map(_.secs).sorted
+    if (ts.size < reps) -1.0 else ts((ts.size - 1) / 2)
   }
 
   /** Run each query `reps` times on `spark` into the noop sink. */

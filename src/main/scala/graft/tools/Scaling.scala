@@ -10,7 +10,9 @@ package graft.tools
   *
   * A query is flagged superlinear when t(sf0.1) > 10 x t(sf0.01) AND
   * the large-SF time exceeds 0.5 s — the floor keeps sub-noise timings
-  * (a 30 ms query jittering to 400 ms) from crying wolf.
+  * (a 30 ms query jittering to 400 ms) from crying wolf. Each SF dir
+  * is swept once through [[Profile.sweep]], the sweep Bench runs, and
+  * each query's time is its [[Profile.median]].
   *
   * Run: SPARK_GRAFT_SCALING_REPS=2 sbt 'runMain graft.tools.Scaling'
   * (writes SCALING.json in the working directory). The decade is
@@ -34,27 +36,21 @@ object Scaling {
     val only = sys.env.get("SPARK_GRAFT_SCALING_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
 
-    def sweep(sfDir: String): Map[String, Double] =
-      graft.SparkEntry.queries.keys.toSeq.sorted
-        .filter(name => only.forall(_.contains(name)))
-        .map { name =>
-        val times = (1 to reps).map(runner.query(name, _, sfDir)).filter(_.ok).map(_.secs)
-        val med =
-          if (times.size < reps) -1.0
-          else times.sorted.apply((times.size - 1) / 2)
-        name -> med
-      }.toMap
+    val named = graft.SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+    def medians(sfDir: String): Map[String, Double] =
+      Profile.sweep(runner, sfDir, named, reps).groupBy(_.name)
+        .map { case (name, runs) => name -> Profile.median(runs, reps) }
 
-    val small = sweep(smallDir)
-    val large = sweep(largeDir)
-    val names = small.keySet.toSeq.sorted
+    val small = medians(smallDir)
+    val large = medians(largeDir)
     def f(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
-    val rows = names.map { n =>
+    val rows = named.map { n =>
       val (s, l) = (small(n), large(n))
       val ratio = if (s > 0 && l >= 0) l / s else -1.0
       s""""$n":{"sf001":${f(s)},"sf01":${f(l)},"ratio":${f(ratio)}}"""
     }
-    val superlinear = names.filter { n =>
+    val superlinear = named.filter { n =>
       val (s, l) = (small(n), large(n))
       s > 0 && l > 10 * s && l > 0.5
     }

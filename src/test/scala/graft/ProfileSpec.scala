@@ -53,6 +53,26 @@ class ProfileSpec extends SparkSpec {
     } finally runner.close()
   }
 
+  test("the runner releases every lineage cut a graph query leaves behind") {
+    // pagerank's and bfs's cuts, and each convergence loop's final cut,
+    // are localCheckpoint RDDs that clearCache() does not reach
+    val runner = new tools.Profile.Runner(spark, "profile")
+    try for (q <- Seq("graph_pagerank", "graph_bfs_reach")) {
+      val r = runner.query(q, 1, Sf)
+      assert(r.ok, r.line)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, q)
+      // A frame still held after its run keeps its cuts reachable, so no
+      // GC-driven ContextCleaner pass can drop them: only the runner does.
+      var held: org.apache.spark.sql.DataFrame = null
+      val h = runner(q, 2) {
+        held = SparkEntry.queries(q)(spark, Sf)
+        tools.Profile.noop(held)
+      }
+      assert(h.ok && held != null, h.line)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty, s"$q, frame held")
+    } finally runner.close()
+  }
+
   test("the spec session carries Session's shipped confs") {
     // spark.sql.extensions, spark.sql.parquet.aggregatePushDown, AQE, ...
     for ((k, v) <- Session.confs(2))
