@@ -101,6 +101,8 @@ object EtlQueries {
 
   // ------------------------------------------------------------- pending
 
+  /** The fixtures' line row id (must stay in lockstep with
+    * etl.Sources.lineRid). */
   private val ddbRid = "(l.l_orderkey * 8 + l.l_linenumber)"
 
   private val ddbPendingRaw =

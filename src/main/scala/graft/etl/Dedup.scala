@@ -13,25 +13,21 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** J4/J5 — left anti-join against the target's key set.
+  /** J4/J5 — left anti-join against a SEPARATE target's key set, with
+    * per-side key normalization (ventas_totales.py:186-203): the general
+    * operator, for a target that is not a slice of the incoming rows
+    * (the production S6 scan). `normalized` maps key name →
+    * normalization expression over that column (identity for exact
+    * keys); the normalization is applied below the join so column
+    * pruning and runtime filters stay effective.
     *
     * Scale: the target side can be huge (every previously loaded row), so
-    * we project it to the key columns FIRST (key-only scan, parity with
-    * `SELECT keys FROM target` — ventas_totales.py:176-180), distinct it
-    * (map-side partial agg shrinks the shuffle), and let AQE pick
+    * it is projected to the key columns FIRST (key-only scan, parity with
+    * `SELECT keys FROM target` — ventas_totales.py:176-180) and distinct
+    * (map-side partial agg shrinks the shuffle), and AQE picks
     * broadcast vs shuffled-hash vs SMJ from the runtime size. Runtime
     * bloom filters (spark.sql.optimizer.runtime.bloomFilter.enabled)
     * prune the incoming side before the shuffle when the key set is big.
-    */
-  def antiJoinNew(incoming: DataFrame, existing: DataFrame, keys: Seq[String]): DataFrame = {
-    val keySet = existing.select(keys.map(col): _*).distinct()
-    incoming.join(keySet, keys, "left_anti")
-  }
-
-  /** J4 with per-side key normalization (ventas_totales.py:186-203): the
-    * normalization is applied below the join so column pruning and
-    * runtime filters stay effective. `normalized` maps key name →
-    * normalization expression over that column.
     */
   def antiJoinNewNormalized(
       incoming: DataFrame, existing: DataFrame,
@@ -48,38 +44,35 @@ object Dedup {
       .drop(normKeys: _*)
   }
 
-  /** J4 for the SELF-DERIVED-target case: the existing side is, by
-    * construction, `incoming.filter(existingPred)` projected to keys —
-    * the harness shape, where "already loaded" rows are a predicate
-    * over the same derived file. [[antiJoinNewNormalized]] would
-    * execute the incoming subtree TWICE (once per join side; the
-    * round-8/9 materialization A/Bs showed recompute beats caching the
-    * wide frame, but both passes remain). This form computes the same
-    * multiset in ONE pass: a per-key window flags whether ANY row of
-    * the key's group satisfies the predicate, and flagged groups drop.
-    * Same shuffle key as the anti-join, one derivation instead of two,
-    * no runtime-bloom machinery.
+  /** J4/J5 for a SELF-DERIVED target: the existing side is, by
+    * construction, `incoming.filter(existingPred)` — every incremental
+    * load here, where "already loaded" rows are a predicate over the
+    * load's own prepared rows. Exactly
+    * `antiJoinNewNormalized(incoming, incoming.filter(existingPred), normalized)`
+    * in ONE pass: a per-key window flags whether ANY row of the key's
+    * group satisfies the predicate, and flagged groups drop. One
+    * derivation of the incoming subtree instead of two, no cache, no
+    * runtime-bloom machinery.
     *
-    * Null caveat (why this is not the general operator): an equi
-    * anti-join treats a NULL key as matching nothing (the row always
-    * survives), while a window partition groups NULL keys together.
-    * Callers must guarantee non-null normalized keys — true for the
-    * ventas keys by construction (id_cliente inner-joined, strict date
-    * on a generated format, keys from non-null TPC-H columns). When the
-    * target is a genuinely separate table (the production S6 scan),
-    * use [[antiJoinNewNormalized]] — there is no single-pass form. */
+    * Nulls as in the SQL anti-join: a row whose normalized key has a
+    * null never matches, so it never flags its group and always
+    * survives. */
   def antiJoinSelfNormalized(
       incoming: DataFrame, existingPred: Column,
       normalized: Seq[(String, Column => Column)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(
-      normalized.map { case (k, f) => f(col(k)) }: _*)
+    val keys = normalized.map { case (k, f) => f(col(k)) }
+    val matchable = existingPred && keys.map(_.isNotNull).reduce(_ && _)
     incoming
       .withColumn("__in_existing",
-        max(when(existingPred, 1).otherwise(0)).over(w))
+        max(when(matchable, 1).otherwise(0)).over(Window.partitionBy(keys: _*)))
       .filter(col("__in_existing") === 0)
       .drop("__in_existing")
   }
+
+  /** Identity normalization over exact key columns, for either form. */
+  def exactKeys(keys: String*): Seq[(String, Column => Column)] =
+    keys.map(k => k -> ((c: Column) => c))
 
   /** Exact duplicate removal within a dataset (training-data pipeline
     * operator): hash-groupBy on the content columns, keep the row with

@@ -146,6 +146,11 @@ object Expressions {
     "dia" -> dayofmonth(c),
     "anio" -> year(c))
 
+  /** D7 — load stamp: the pinned `loadDate` (oracle determinism), else
+    * the run date (cartera.py:179; pending_orders.py:167). */
+  def loadStamp(loadDate: Option[String]): Column =
+    loadDate.map(d => to_date(lit(d))).getOrElse(current_date())
+
   /** D9 — ES↔EN month translation (wor2.py:65-76). */
   val MonthEsToEn: Map[String, String] = Map(
     "Enero" -> "January", "Febrero" -> "February", "Marzo" -> "March",

@@ -1,7 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{concat, floor, format_number, lit, lpad, round}
+import org.apache.spark.sql.functions.{col, concat, floor, format_number, lit, lpad, round}
 
 /** Source layer — SURVEY.md §2.1.
   *
@@ -51,6 +51,12 @@ object Sources {
     concat(format_number(floor(amount).cast("long"), 0), lit("."),
       lpad(round((amount - floor(amount)) * 100).cast("long").cast("string"), 2, "0"))
 
+  /** The fixtures' line row id, `l_orderkey * 8 + l_linenumber`, that
+    * scatters the synthesized dirty cases deterministically. The DuckDB
+    * oracles build the same id with `EtlQueries.ddbRid`; the two must
+    * stay in lockstep. */
+  def lineRid: Column = col("l_orderkey") * 8 + col("l_linenumber")
+
   /** `events` loader, adaptive to the two `ts` layouts the driver has
     * shipped: parquet TIMESTAMP(NANOS) (surfaced as a nanos long under
     * the legacy reader conf — converted with integral DIV, not double
@@ -83,7 +89,7 @@ object Sources {
     * scan rejects it rather than guess. Pre-1973 data must ship as a
     * typed TIMESTAMP column, which bypasses this guard entirely. */
   def normalizeTs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", expr(

@@ -95,7 +95,6 @@ object Cartera {
     * `NATION_(\d+)`, and any other unmatched zone yields null. When real
     * zone strings arrive, keep the raw zona in a separate column instead. */
   def load(spark: SparkSession, sfDir: String, loadDate: Option[String] = None): DataFrame = {
-    val stamp = loadDate.map(d => to_date(lit(d))).getOrElse(current_date())
     enriched(spark, sfDir)
       .withColumn("id_zone",
         coalesce(col("id_zone"),
@@ -111,7 +110,7 @@ object Cartera {
         col("document_number"),
         E.formatDateIso(E.parseDateLenient(col("fecha_pago_raw"))).as("fecha_pago"),
         col("open_balance"),
-        E.formatDateIso(stamp).as("fecha_carga"))
+        E.formatDateIso(E.loadStamp(loadDate)).as("fecha_carga"))
   }
 
   /** A1 — distinct unmatched client names (cartera.py:126-128). */

@@ -18,10 +18,8 @@ import graft.etl.{Expressions => E, Sources}
   */
 object PendingOrders {
 
-  /** Row id used to scatter the synthesized dirty cases deterministically. */
-  private def rid = col("l_orderkey") * 8 + col("l_linenumber")
-
   def rawFact(spark: SparkSession, sfDir: String): DataFrame = {
+    val rid = Sources.lineRid
     // Scatter the fact scan before the broadcast-join + string-synth
     // chain: with every dim broadcast there is no exchange anywhere in
     // this pipeline, so the whole per-row expression tree inherits the
@@ -80,7 +78,6 @@ object PendingOrders {
   }
 
   def load(spark: SparkSession, sfDir: String, loadDate: Option[String] = None): DataFrame = {
-    val stamp = loadDate.map(d => to_date(lit(d))).getOrElse(current_date())
     val fecha = E.dateWithDefault(E.parseDateLenient(col("fecha_raw")))
     val base = enriched(spark, sfDir)
       .filter(col("id_cliente").isNotNull)
@@ -104,7 +101,7 @@ object PendingOrders {
       col("mes").cast("long").as("mes"),
       col("dia").cast("long").as("dia"),
       col("anio").cast("long").as("anio"),
-      E.formatDateIso(stamp).as("fecha_carga"))
+      E.formatDateIso(E.loadStamp(loadDate)).as("fecha_carga"))
   }
 
   /** F11 — class_item null → 'Descuento' (pending_orders.py:80). */

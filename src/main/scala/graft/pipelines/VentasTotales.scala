@@ -23,10 +23,9 @@ object VentasTotales {
 
   val Cutoff = "2000-01-01"
 
-  private def rid = col("l_orderkey") * 8 + col("l_linenumber")
-
   /** The raw sales file (S2/S3): one row per order line, messy. */
   def rawFile(spark: SparkSession, sfDir: String): DataFrame = {
+    val rid = Sources.lineRid
     // Scatter the single-file fact scan before the broadcast-enrichment
     // + string-synth chain (see Sources.scatter; no-op on a split scan).
     val li = Sources.scatter(spark,
@@ -138,20 +137,17 @@ object VentasTotales {
       .agg(sum(when(E.parseMoneyNullable(col("amount_raw")).isNull, 1L)
         .otherwise(0L)).as("non_numeric_amounts"))
 
-  /** The dedup key columns (ventas_totales.py:169). */
-  private val KeyCols = Seq("id_cliente", "fecha", "document_number", "item")
-
-  /** J4 key normalization, applied to BOTH sides of the anti-join
-    * (ventas_totales.py:186-203). Single source of truth — load, rerun
-    * and the target scan must stay in lockstep. */
-  private val DedupNormalization: Seq[(String, Column => Column)] = Seq(
+  /** J4 key (ventas_totales.py:169) and its normalization, applied to
+    * BOTH sides of the dedup (ventas_totales.py:186-203). Single source of
+    * truth — load and rerun must stay in lockstep. */
+  private[graft] val DedupNormalization: Seq[(String, Column => Column)] = Seq(
     "id_cliente" -> (_.cast("long")),
     "fecha" -> (c => date_trunc("day", c).cast("date")),
     "document_number" -> (c => trim(c.cast("string"))),
     "item" -> (c => trim(c.cast("string"))))
 
   /** The destination-table projection (Ventas_Totales columns). */
-  private def toTargetColumns(df: DataFrame): DataFrame =
+  private[graft] def toTargetColumns(df: DataFrame): DataFrame =
     df.select(
       col("id_cliente"),
       E.formatDateIso(col("fecha")).as("fecha"),
@@ -165,20 +161,11 @@ object VentasTotales {
       col("amount"),
       col("created_from"))
 
-  /** The already-loaded target (S6 key scan): everything shipped before
-    * the cutoff, keys only. */
-  def existingTarget(spark: SparkSession, sfDir: String): DataFrame =
-    prepared(spark, sfDir)
-      .filter(col("__ship") < to_date(lit(Cutoff)))
-      .select(KeyCols.map(col): _*)
-
-  /** The incremental load: J4 anti-join with key normalization on both
-    * sides (ventas_totales.py:186-209).
-    *
-    * NB: the existing-target side recomputes the prepared subtree (the
-    * harness derives both sides from the same tables); measured at
-    * sf0.1, recomputing the columnar scan+joins is ~4x cheaper than
-    * persisting 1.2M wide cached rows, so this stays cache-free. */
+  /** The incremental load: J4 dedup with key normalization on both
+    * sides (ventas_totales.py:186-209). The target is a slice of
+    * [[prepared]], so the one-pass window form derives it once, with no
+    * cache (measured at sf0.1, recomputing the columnar scan+joins is
+    * ~4x cheaper than persisting 1.2M wide cached rows). */
   def load(spark: SparkSession, sfDir: String): DataFrame =
     toTargetColumns(
       Dedup.antiJoinSelfNormalized(
@@ -186,20 +173,12 @@ object VentasTotales {
         col("__ship") < to_date(lit(Cutoff)),
         DedupNormalization))
 
-  /** The two-pass anti-join formulation of [[load]] (kept for the A/B
-    * and as the shape a separate-table target would use). */
-  private[graft] def loadAntiJoin(spark: SparkSession, sfDir: String): DataFrame =
-    toTargetColumns(
-      Dedup.antiJoinNewNormalized(
-        prepared(spark, sfDir), existingTarget(spark, sfDir),
-        DedupNormalization))
-
   /** Re-run recovery scenario (Ventas PDF §9 "Escenario de Recuperación"):
     * processing the same file against a target that already holds every
     * key inserts zero rows. */
   def rerun(spark: SparkSession, sfDir: String): DataFrame = {
-    // BOTH sides recompute the prepared subtree rather than persisting
-    // it — re-A/B'd under round-8 full-sweep conditions after the
+    // The prepared subtree is recomputed rather than persisted —
+    // re-A/B'd under round-8 full-sweep conditions after the
     // round-7 driver sweep measured this query at 63 s: with the
     // status-store retention leak fixed (see Session.scala), recompute
     // runs 4.7 s in-sweep vs 11.1 s for the persisted variant (cache
@@ -208,16 +187,5 @@ object VentasTotales {
     toTargetColumns(
       Dedup.antiJoinSelfNormalized(
         prepared(spark, sfDir), lit(true), DedupNormalization))
-  }
-
-  /** The two-pass anti-join formulation of [[rerun]] (A/B twin; the
-    * materialization A/B is PERF.md "Round-9 ventas materialization
-    * three-way A/B"). */
-  private[graft] def rerunAntiJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val incoming = prepared(spark, sfDir)
-    toTargetColumns(
-      Dedup.antiJoinNewNormalized(
-        incoming, incoming.select(KeyCols.map(col): _*),
-        DedupNormalization))
   }
 }

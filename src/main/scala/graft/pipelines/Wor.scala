@@ -274,15 +274,12 @@ object Wor {
   /** Forecast load (wor2.py:310-360): F3 upper+trim client lookup (J2),
     * J3 zone map w/ default 1, P6 reject, P4 projection, week coercion,
     * J5 anti-join on (id_cliente, id_zone, mes, anio). */
-  def forecastLoad(spark: SparkSession, sfDir: String): DataFrame = {
-    // Both anti-join sides derive from the same prepared frame; persist so
-    // the workbook synthesis + clean + enrich subtree runs once.
-    val prepared = forecastAllRows(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val existing = prepared.filter(col("mes") <= LoadedThroughMonth)
-    Dedup.antiJoinNew(prepared, existing,
-      Seq("id_cliente", "id_zone", "mes", "anio"))
-  }
+  def forecastLoad(spark: SparkSession, sfDir: String): DataFrame =
+    Dedup.antiJoinSelfNormalized(forecastAllRows(spark, sfDir),
+      col("mes") <= LoadedThroughMonth, ForecastKeys)
+
+  /** The forecast target's key (wor2.py:341-348). */
+  private val ForecastKeys = Dedup.exactKeys("id_cliente", "id_zone", "mes", "anio")
 
   /** The fully-prepared forecast rows (pre-dedup) — shared by the load
     * and the idempotence probe. */
@@ -304,12 +301,8 @@ object Wor {
 
   /** Re-run idempotence (Ventas PDF §9 applied to WOR): the anti-join vs
     * a target that already holds every key inserts zero rows. */
-  def forecastRerun(spark: SparkSession, sfDir: String): DataFrame = {
-    val prepared = forecastAllRows(spark, sfDir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Dedup.antiJoinNew(prepared, prepared,
-      Seq("id_cliente", "id_zone", "mes", "anio"))
-  }
+  def forecastRerun(spark: SparkSession, sfDir: String): DataFrame =
+    Dedup.antiJoinSelfNormalized(forecastAllRows(spark, sfDir), lit(true), ForecastKeys)
 
   /** Cuotas_Avance_Categoria load (wor2.py:362-408): J3 product map with
     * reject (P6), J3 zone map w/ default, numeric coercion (cuota_dinero
@@ -328,10 +321,8 @@ object Wor {
     val prepared = Sources.projectTolerant(df,
       Seq("cuota_dinero", "cuota_volumen", "id_producto", "id_zone",
         "nombre_mes", "mes", "anio"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val existing = prepared.filter(col("mes") <= LoadedThroughMonth)
-    Dedup.antiJoinNew(prepared, existing,
-      Seq("id_producto", "id_zone", "mes", "anio"))
+    Dedup.antiJoinSelfNormalized(prepared, col("mes") <= LoadedThroughMonth,
+      Dedup.exactKeys("id_producto", "id_zone", "mes", "anio"))
   }
 
   /** Dead path (SURVEY §3 quirk 1): the zone-quotas bucket is never

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.etl.Dedup
 import graft.pipelines.{Cartera, PendingOrders, VentasTotales, Wor}
 
 /** Golden invariants of the four pipelines over the smallest driver
@@ -89,15 +90,32 @@ class PipelinesSpec extends SparkSpec {
   }
 
   test("ventas: one-pass window form equals the two-pass normalized anti-join") {
-    // load/rerun ship the window form (Dedup.antiJoinSelfNormalized);
-    // the general J4 operator (antiJoinNewNormalized) must stay verified
-    // — cross-check the two formulations produce the SAME multiset,
-    // within-batch duplicates included
+    // every self-targeted load ships the window form
+    // (Dedup.antiJoinSelfNormalized); the general J4 operator
+    // (antiJoinNewNormalized) over `prepared.filter(pred)` is its
+    // reference — cross-check the two formulations produce the SAME
+    // multiset, within-batch duplicates included
     def multiset(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-    assert(multiset(VentasTotales.load(spark, Sf)) ==
-      multiset(VentasTotales.loadAntiJoin(spark, Sf)))
-    assert(VentasTotales.rerun(spark, Sf).isEmpty)
-    assert(VentasTotales.rerunAntiJoin(spark, Sf).isEmpty)
+    val ventas = VentasTotales.prepared(spark, Sf)
+    def ventasRef(pred: org.apache.spark.sql.Column) =
+      VentasTotales.toTargetColumns(Dedup.antiJoinNewNormalized(
+        ventas, ventas.filter(pred), VentasTotales.DedupNormalization))
+    val forecast = Wor.forecastAllRows(spark, Sf)
+    def forecastRef(pred: org.apache.spark.sql.Column) =
+      Dedup.antiJoinNewNormalized(forecast, forecast.filter(pred),
+        Dedup.exactKeys("id_cliente", "id_zone", "mes", "anio"))
+    for ((load, reference) <- Seq(
+        VentasTotales.load(spark, Sf) ->
+          ventasRef(col("__ship") < to_date(lit(VentasTotales.Cutoff))),
+        Wor.forecastLoad(spark, Sf) ->
+          forecastRef(col("mes") <= Wor.LoadedThroughMonth)))
+      assert(multiset(load) == multiset(reference))
+    for ((rerun, reference) <- Seq(
+        VentasTotales.rerun(spark, Sf) -> ventasRef(lit(true)),
+        Wor.forecastRerun(spark, Sf) -> forecastRef(lit(true)))) {
+      assert(rerun.isEmpty)
+      assert(reference.isEmpty)
+    }
   }
 }

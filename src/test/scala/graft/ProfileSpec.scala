@@ -5,10 +5,10 @@ package graft
   * the benchmark measure the same engine). */
 class ProfileSpec extends SparkSpec {
 
-  // Jobs and stages per query on the spec session at sf0.001, measured
-  // twice (two JVMs, two reps each) on the hand-rolled convergence loops
-  // before they moved onto DedupQueries.untilStable. They pin the plans
-  // of the graph family: a change that moves one says why.
+  // Jobs and stages per query on the spec session at sf0.001, each
+  // measured twice in two JVMs. They pin the plans of the graph family
+  // and of the self-targeted incremental loads (one window dedup pass,
+  // no cache): a change that moves one says why.
   private val pins = Seq(
     "graph_kcore" -> (26, 26),
     "graph_pagerank" -> (39, 39),
@@ -16,7 +16,11 @@ class ProfileSpec extends SparkSpec {
     "graph_bfs_reach" -> (30, 30),
     "dedup_clusters" -> (29, 29),
     "dedup_clusters_star" -> (32, 32),
-    "dedup_keep_best" -> (32, 32))
+    "dedup_keep_best" -> (32, 32),
+    "wor_forecast_load" -> (10, 10),
+    "wor_forecast_rerun_zero" -> (10, 10),
+    "wor_cuotas_categoria_load" -> (6, 6),
+    "ventas_incremental" -> (11, 11))
 
   for ((q, (jobs, stages)) <- pins)
     test(s"Profile counts jobs and stages for $q at sf0.001") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.etl.{Dedup, Sources}
 
@@ -54,7 +55,7 @@ class SourcesDedupSpec extends SparkSpec {
   test("J4 anti-join dedup: only new keys survive; within-batch dups preserved (quirk 4)") {
     val existing = Seq((1, "x"), (2, "y")).toDF("k", "v")
     val incoming = Seq((2, "y"), (3, "z"), (3, "z")).toDF("k", "v") // 3 duplicated in-batch
-    val out = Dedup.antiJoinNew(incoming, existing, Seq("k")).collect()
+    val out = Dedup.antiJoinNewNormalized(incoming, existing, Dedup.exactKeys("k")).collect()
     assert(out.length == 2) // both copies of key 3 insert — no in-batch dedup
     assert(out.forall(_.getInt(0) == 3))
   }
@@ -66,6 +67,28 @@ class SourcesDedupSpec extends SparkSpec {
       incoming, existing, Seq("k" -> (c => lower(trim(c)))))
     assert(out.columns.toSeq == Seq("k"))
     assert(out.collect().map(_.getString(0)).toSeq == Seq("b"))
+  }
+
+  test("J4 self-target window form is null-exact: a null-key row never matches, so it survives") {
+    // (k, tag, old): `old` rows are the already-loaded target. Null keys
+    // in `old` rows must neither drop themselves nor their null group,
+    // exactly as in the SQL anti-join; a blank tag normalizes to null.
+    val df = Seq[(Integer, String, Boolean)](
+      (null, "a", true), (null, "a", false), (1, null, true), (3, "  ", true),
+      (1, "a", true), (1, "a", false), (2, "b", false), (2, "b", false),
+      (2, "B ", true))
+      .toDF("k", "tag", "old")
+    val norm: Seq[(String, Column => Column)] =
+      Seq("k" -> (c => c), "tag" -> (c => nullif(upper(trim(c)), lit(""))))
+    def multiset(d: DataFrame) =
+      d.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+    val window = Dedup.antiJoinSelfNormalized(df, col("old"), norm)
+    val reference = Dedup.antiJoinNewNormalized(df, df.filter(col("old")), norm)
+    assert(window.columns.toSeq == df.columns.toSeq)
+    assert(multiset(window) == multiset(reference))
+    assert(multiset(window) == multiset(Seq[(Integer, String, Boolean)](
+      (null, "a", true), (null, "a", false), (1, null, true), (3, "  ", true))
+      .toDF("k", "tag", "old")))
   }
 
   test("exact dedup keeps the smallest id per content group") {
