@@ -14,8 +14,8 @@ object Bench {
     Profile.warmUp(spark)
     locally {
       import org.apache.spark.sql.functions.broadcast
-      val c = spark.read.parquet(s"$sfDir/customer.parquet")
-      val n = spark.read.parquet(s"$sfDir/nation.parquet")
+      val c = etl.Sources.table(spark, sfDir, "customer")
+      val n = etl.Sources.table(spark, sfDir, "nation")
       c.join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .selectExpr(
           "count(distinct trim(regexp_replace(lower(c_name), '[^a-z0-9 ]', '')))",

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 import graft.Registry.Q
-import graft.etl.Sources.table
+import graft.etl.Sources.{parquet, table}
 import graft.functions.{HashFunctions => H}
 
 /** Similarity search over the `embeddings` table (64-dim float vectors):
@@ -1421,7 +1421,7 @@ object SimilarityQueries {
     "sim_index_build",
     (s, dir) => {
       val root = buildIndex(s, dir)
-      s.read.parquet(s"$root/lists")
+      parquet(s, s"$root/lists")
         .groupBy(col("centroid_id"))
         .agg(count(lit(1)).as("n_members"),
           sum(col("vec_id")).cast("long").as("member_id_sum"))
@@ -1462,8 +1462,8 @@ object SimilarityQueries {
     (s, dir) => {
       val root = indexRoot(dir)
       if (!new java.io.File(s"$root/lists/_SUCCESS").exists()) buildIndex(s, dir)
-      val centroids = s.read.parquet(s"$root/centroids")
-      val lists = s.read.parquet(s"$root/lists")
+      val centroids = parquet(s, s"$root/centroids")
+      val lists = parquet(s, s"$root/lists")
         .toDF("neighbor_id", "n_emb", "centroid_id")
       val nProbe = ivfNProbe(centroids.count())
       val probes = probeRanks(
@@ -1510,8 +1510,8 @@ object SimilarityQueries {
     (s, dir) => {
       val root = indexRoot(dir)
       if (!new java.io.File(s"$root/pq_codes/_SUCCESS").exists()) buildIndex(s, dir)
-      val codebooks = s.read.parquet(s"$root/pq_codebooks")
-      val codes = s.read.parquet(s"$root/pq_codes")
+      val codebooks = parquet(s, s"$root/pq_codebooks")
+      val codes = parquet(s, s"$root/pq_codes")
       val e = table(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       // query-side subvectors only — |Q| rows, not the corpus
       val qsubs = pqSubs(e.filter(col("vec_id") % QueryMod === 0))

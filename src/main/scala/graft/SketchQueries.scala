@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.Registry.Q
-import graft.etl.Sources.table
+import graft.etl.Sources.{parquet, table}
 
 /** Mergeable-sketch operators. The cardinality workhorses at 100 TB are
   * sketches (HLL/KMV/theta): fixed-size state, partition-local build,
@@ -1577,8 +1577,8 @@ object SketchQueries {
     "layout_dpp_scan",
     (s, dir) => {
       val root = ensureDppLayout(s, dir)
-      val fact = s.read.parquet(s"$root/fact")
-      val dim = s.read.parquet(s"$root/dim").filter(col("d_status") === "hot")
+      val fact = parquet(s, s"$root/fact")
+      val dim = parquet(s, s"$root/dim").filter(col("d_status") === "hot")
       fact.join(broadcast(dim), col("part_month") === col("d_month"))
         .groupBy(col("part_month"))
         .agg(count(lit(1)).as("n_rows"),

@@ -176,7 +176,7 @@ object Sinks {
         "overwrite would delete the source files mid-read")
     val bytes = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(inPath)
+    val df = Sources.parquet(spark, inPath)
     val sized = if (rebalance) df.repartition(n) else df.coalesce(n)
     sized.write.mode("overwrite").parquet(outPath)
     n

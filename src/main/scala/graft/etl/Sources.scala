@@ -1,7 +1,14 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, concat, floor, format_number, lit, lpad, round}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Source layer — SURVEY.md §2.1.
   *
@@ -12,29 +19,104 @@ import org.apache.spark.sql.functions.{col, concat, floor, format_number, lit, l
   */
 object Sources {
 
-  /** Parquet table loader. Columnar scan → Catalyst gets pushdown +
-    * pruning for free; `.explain` must show PushedFilters / ReadSchema. */
+  /** Table `name` of an SF dir, `$sfDir/$name.parquet`, read by [[parquet]]. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The program's one parquet reader. Columnar scan → Catalyst gets
+    * pushdown + pruning for free; `.explain` must show PushedFilters /
+    * ReadSchema.
+    *
+    * A bare `spark.read.parquet` infers the schema with a one-task Spark
+    * job on every call. Here the schema comes from one footer read on the
+    * driver and is handed to the reader, so building the frame launches
+    * no job. The footer is picked by Spark's own rule
+    * (`ParquetUtils.inferSchema` with mergeSchema off): `_common_metadata`,
+    * then `_metadata`, then the first data file in path order, among the
+    * files Spark's file index lists (hidden `_`/`.` names skipped). Spark's
+    * own converter, built from the session conf, turns the footer into the
+    * schema, so `nanosAsLong` ([[events]]), NTZ inference and
+    * Spark-written schema metadata read exactly as `spark.read.parquet`
+    * reads them. Partition columns still come from Spark's file index.
+    *
+    * With `spark.sql.parquet.mergeSchema` on, or when the path matches no
+    * data file, this is plain `spark.read.parquet`, so Spark's own
+    * behaviour and errors (a missing path, an empty directory) stay.
+    * Nothing is kept between calls. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val hconf = spark.sessionState.newHadoopConf()
+    val files = if (conf.isParquetSchemaMergingEnabled) Nil else leafFiles(hconf, path)
+    val (summaries, data) = files.partition(f => Summaries.contains(f.getPath.getName))
+    val schema = if (data.isEmpty) None else {
+      val pick = Summaries.flatMap(n => summaries.find(_.getPath.getName == n))
+        .headOption.getOrElse(data.head)
+      Some(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(pick.getPath, footer(hconf, pick.getPath, rowGroups = false)),
+        new ParquetToSparkSchemaConverter(conf)))
+    }
+    schema.fold(spark.read)(spark.read.schema(_)).parquet(path)
+  }
+
+  /** Parquet summary files, in the order Spark prefers their footer. */
+  private val Summaries = Seq(
+    ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** The leaf files a file-source scan of `path` lists, in path order. */
+  private def leafFiles(hconf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => Bridge.skippedByFileIndex(c.getPath.getName)).flatMap(walk)
+    Option(fs.globStatus(p)).toSeq.flatten.flatMap(walk).sortBy(_.getPath.toString)
+  }
+
+  /** One parquet footer, read on the driver; the row-group list only when
+    * asked for. */
+  private def footer(hconf: Configuration, file: Path, rowGroups: Boolean): ParquetMetadata =
+    ParquetFileReader.readFooter(hconf, file, if (rowGroups) NO_FILTER else SKIP_ROW_GROUPS)
 
   /** Scale-adaptive scan scatter (optimization guide §2.5 "input skew":
     * one huge unsplittable file → repartition immediately after the
     * read). The bench SF dirs ship each table as ONE small parquet file
-    * (one row group), so a scan is a single partition — and the ETL
+    * (one row group), so a scan has one non-empty split — and the ETL
     * loads are otherwise shuffle-free broadcast enrichments, meaning
     * their entire per-row expression chain (string synthesis + parses +
     * cleaning) ran on ONE core of local[N] (r20 measurement: the same
     * chain is 3-4x faster once scattered; dq_profile_wide had applied
-    * the same fix in r11). The branch keys off the scan's OWN partition
-    * count vs the session's parallelism, so at cluster scale — where
-    * the fact scan is already thousands of splits — this is a no-op and
-    * no extra exchange is paid. Hash-distributing on a provided key
-    * avoids round-robin's sort-before-repartition pass; results are
-    * row-order independent (every declared query is canon-sort-hashed).
-    */
-  def scatter(spark: SparkSession, df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    val want = spark.sparkContext.defaultParallelism
-    if (needScatter(df.rdd.getNumPartitions, want)) df.repartition(want, key)
+    * the same fix in r11). Hash-distributing on a provided key avoids
+    * round-robin's sort-before-repartition pass; results are row-order
+    * independent (every declared query is canon-sort-hashed).
+    *
+    * The decision compares the scan's width with the session's
+    * parallelism ([[needScatter]]) and reads that width from the parquet
+    * footers on the driver, without planning the scan: a parquet scan
+    * has no more non-empty splits than row groups. Its planned partition
+    * count is no measure — Spark splits a file by bytes, so one row group
+    * can span several splits, all but one empty (sf0.1 lineitem on 4
+    * cores: 3 splits of 0 / 600,000 / 0 rows). With at least half as many
+    * files as the session's parallelism the scan is wide enough and no
+    * footer is read, so at cluster scale — thousands of files — this is
+    * a no-op and no extra exchange is paid. The count is an upper bound:
+    * a file of many small row groups that Spark packs into fewer splits
+    * reads as wide. `df` must read parquet files (every caller passes a
+    * [[table]] scan); a frame over no files comes back untouched. */
+  def scatter(spark: SparkSession, df: DataFrame, key: Column): DataFrame =
+    scatter(spark, df, key, spark.sparkContext.defaultParallelism)
+
+  /** [[scatter]] to `want` partitions, exposed for the spec (whose
+    * 2-core session never fires the rule). */
+  private[graft] def scatter(spark: SparkSession, df: DataFrame, key: Column, want: Int): DataFrame = {
+    val files = df.inputFiles.map(f => new Path(new java.net.URI(f)))
+      .filterNot(f => Summaries.contains(f.getName))
+    def rowGroups = {
+      val hconf = spark.sessionState.newHadoopConf()
+      files.map(footer(hconf, _, rowGroups = true).getBlocks.size).sum
+    }
+    if (files.nonEmpty && needScatter(files.length, want) && needScatter(rowGroups, want))
+      df.repartition(want, key)
     else df
   }
 

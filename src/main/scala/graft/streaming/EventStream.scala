@@ -33,13 +33,14 @@ object EventStream {
     *
     * readStream needs the schema up front, and the driver has shipped
     * `ts` as both nanos-long and TIMESTAMP(MICROS) (see Sources.events);
-    * a batch probe of the directory picks up whichever layout is
-    * present, then the shared normalizer gives the stream the same
-    * session-TimestampType `ts` the batch loader produces. An EMPTY
-    * directory — a normal state at stream start — cannot be probed
-    * (schema inference throws), so the probe falls back to [[rawSchema]]
-    * (the nanos-long layout), keeping the stream startable before the
-    * first file lands.
+    * a batch probe of the directory (Sources.parquet, one footer read)
+    * picks up whichever layout is present, then the shared normalizer
+    * gives the stream the same session-TimestampType `ts` the batch
+    * loader produces. An EMPTY directory — a normal state at stream
+    * start — cannot be probed (Sources.parquet hands it to Spark's
+    * schema inference, which throws), so the probe falls back to
+    * [[rawSchema]] (the nanos-long layout), keeping the stream startable
+    * before the first file lands.
     *
     * The layout is probed ONCE at stream creation and frozen for the
     * stream's lifetime: one directory = one physical `ts` layout. A
@@ -49,7 +50,7 @@ object EventStream {
   def fileStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val layout =
-      try spark.read.parquet(dir).schema
+      try graft.etl.Sources.parquet(spark, dir).schema
       catch { case _: org.apache.spark.sql.AnalysisException => rawSchema }
     graft.etl.Sources.normalizeTs(
       spark.readStream

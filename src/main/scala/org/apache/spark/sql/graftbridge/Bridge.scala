@@ -40,6 +40,14 @@ object Bridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Spark's own file-listing rule for names a file source skips
+    * (`_`/`.` files and directories, `._COPYING_`), keeping the parquet
+    * summaries `_metadata` and `_common_metadata` — lets
+    * graft.etl.Sources pick a parquet footer from the same files the
+    * scan's file index lists (`HadoopFSUtils` is private[spark]). */
+  def skippedByFileIndex(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Register graft's SQL functions on an already-built session (e.g.
     * `SELECT graft_polyhash(text) FROM docs`) — the same function list
     * the extensions path injects, so the registries cannot drift. */

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Pins for the round-20 optimization internals.
   *
   * O1 — Sources.scatter: the scale-adaptive scan scatter must
-  * repartition a single-split scan to the session parallelism and be
+  * repartition a scan with fewer row groups than half the session
+  * parallelism — however many byte splits Spark plans for it — and be
   * an exact no-op (same plan object, no added exchange) when the
   * input is already split at least half as wide as the session.
   *
@@ -21,9 +22,9 @@ import org.apache.spark.sql.functions._
   * eager cut and the shipped lazy [[DedupQueries.cutLineage]] are
   * checked. */
 class R20OptSpec extends SparkSpec {
+  import graft.etl.Sources.needScatter
 
   test("scatter decision: fires only when the scan is under-split vs the session") {
-    import graft.etl.Sources.needScatter
     assert(needScatter(parts = 1, want = 32))      // the bench SF case
     assert(needScatter(parts = 15, want = 32))
     assert(!needScatter(parts = 16, want = 32))    // half-wide scan: leave it
@@ -49,6 +50,28 @@ class R20OptSpec extends SparkSpec {
       spark.sparkContext.defaultParallelism).toDF("k")
     val out = graft.etl.Sources.scatter(spark, wide, col("k"))
     assert(out eq wide) // the exact no-op branch, not a re-plan
+  }
+
+  test("scatter: a one-row-group file split by bytes still fires (row groups, not splits)") {
+    import graft.etl.Sources
+    // one data file plus the parquet summaries, which list its row
+    // group again (`_metadata`) and are no data to scan
+    val summarized = java.nio.file.Files.createTempDirectory("graft-scatter").toString + "/t"
+    Sources.table(spark, Sf, "orders").coalesce(1).write
+      .option("parquet.summary.metadata.level", "ALL").parquet(summarized)
+    val maxBytes = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.get(maxBytes)
+    spark.conf.set(maxBytes, "8192")
+    try for (df <- Seq(Sources.table(spark, Sf, "orders"), Sources.parquet(spark, summarized))) {
+      // one ~36 KB row group: 8 KB splits plan several partitions, all
+      // but one empty — wide by the planned count
+      val parts = df.rdd.getNumPartitions
+      assert(!needScatter(parts, 4), s"parts=$parts")
+      val out = Sources.scatter(spark, df, col("o_orderkey"), want = 4)
+      assert(out ne df)
+      assert(out.rdd.getNumPartitions == 4)
+      assert(out.count() == df.count())
+    } finally spark.conf.set(maxBytes, prior)
   }
 
   test("localCheckpoint cut preserves rows and carries usable size stats (join strategy stays size-driven)") {

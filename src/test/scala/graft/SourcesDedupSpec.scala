@@ -97,4 +97,66 @@ class SourcesDedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(out == Set((1L, "same"), (9L, "other")))
   }
+
+  /** A one-row parquet-mr file whose only column is an int64 `ts` of the
+    * given logical type: no Spark schema rides in its footer, so Spark's
+    * converter reads the type under the session conf. */
+  private def rawTsFile(logical: String): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      s"message events { required int64 ts ($logical); }")
+    val dir = Files.createTempDirectory("graft-raw-ts")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(dir.resolve("part-0.parquet").toUri))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", TsLayoutSpec.instantUs * 1000L))
+    finally w.close()
+    dir.toString
+  }
+
+  test("Sources.table reads the schema spark.read.parquet infers, from the footer alone") {
+    val tables = new java.io.File(Sf).list().toSeq.filter(_.endsWith(".parquet")).sorted
+      .map(_.stripSuffix(".parquet"))
+    val orders = Sources.table(spark, Sf, "orders")
+    val root = Files.createTempDirectory("graft-footer")
+    // a Spark-written directory: _SUCCESS, .crc side files, three parts
+    val written = root.resolve("written").toString
+    orders.repartition(3).write.parquet(written)
+    assert(new java.io.File(s"$written/_SUCCESS").exists())
+    // a partitioned directory: string and inferred-int partition columns
+    val parted = root.resolve("parted").toString
+    orders.withColumn("bucket", col("o_orderkey") % 3)
+      .write.partitionBy("o_orderstatus", "bucket").parquet(parted)
+    // parquet summary files: the schema comes from `_common_metadata`
+    val summarized = root.resolve("summarized").toString
+    orders.repartition(2).write.option("parquet.summary.metadata.level", "ALL")
+      .parquet(summarized)
+    assert(new java.io.File(s"$summarized/_common_metadata").exists())
+    val dirs = Seq(written, parted, summarized) ++ TsLayoutSpec.layoutDirs(spark)
+    // TIMESTAMP(NANOS) reads only as a long, under the legacy conf
+    val rawNanos = rawTsFile("TIMESTAMP(NANOS,true)")
+    val rawNtz = rawTsFile("TIMESTAMP(MICROS,false)")
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.get(nanos)
+    try for (asLong <- Seq(true, false)) {
+      spark.conf.set(nanos, asLong.toString)
+      for (t <- tables)
+        assert(Sources.table(spark, Sf, t).schema ==
+          spark.read.parquet(s"$Sf/$t.parquet").schema, s"$t nanosAsLong=$asLong")
+      for (d <- (dirs :+ rawNtz) ++ Option.when(asLong)(rawNanos))
+        assert(Sources.parquet(spark, d).schema == spark.read.parquet(d).schema,
+          s"$d nanosAsLong=$asLong")
+    } finally spark.conf.set(nanos, prior)
+  }
+
+  test("building a Sources.table frame launches no Spark job") {
+    val runner = new tools.Profile.Runner(spark, "sources")
+    try {
+      val r = runner("table", 1) { Sources.table(spark, Sf, "orders").schema; () }
+      assert(r.ok && r.jobs == 0, r.line)
+    } finally runner.close()
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,38 +13,17 @@ import org.apache.spark.sql.types._
   * future driver-side layout change must fail a test here, not a
   * correctness gate. */
 class TsLayoutSpec extends SparkSpec {
-
-  /** 2024-03-01T12:34:56.789012Z in micros since epoch. */
-  private val instantUs = 1709296496789012L
-
-  private def writeLayout(schemaful: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-ts-layout").toString
-    schemaful.coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
-  }
+  import TsLayoutSpec._
 
   test("nanos-long and TIMESTAMP_NTZ parquet layouts normalize to the same instants") {
-    import scala.jdk.CollectionConverters._
-    val rows = Seq(instantUs, instantUs + 1000000L, instantUs + 2500000L)
-    // layout A: ts as a raw nanos-since-epoch long (what the NANOS
-    // physical type surfaces as under spark.sql.legacy.parquet.nanosAsLong)
-    val nanosDf = spark.createDataFrame(
-      rows.map(us => Row(us * 1000L)).asJava,
-      StructType(Seq(StructField("ts", LongType))))
-    // layout B: ts as TIMESTAMP_NTZ (what MICROS isAdjustedToUTC=false
-    // surfaces as); session TZ is pinned UTC so the instant is preserved
-    val ntzDf = spark.createDataFrame(
-      rows.map(us => Row(java.time.LocalDateTime.ofEpochSecond(
-        us / 1000000L, (us % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC))).asJava,
-      StructType(Seq(StructField("ts", TimestampNTZType))))
-    val dirs = Seq(writeLayout(nanosDf), writeLayout(ntzDf))
+    val dirs = layoutDirs(spark)
     val normalized = dirs.map { d =>
       val df = etl.Sources.normalizeTs(spark.read.parquet(d))
       assert(df.schema("ts").dataType == TimestampType)
       df.select(unix_micros(col("ts"))).as[Long](org.apache.spark.sql.Encoders.scalaLong)
         .collect().sorted.toSeq
     }
-    assert(normalized.head == rows.sorted)
+    assert(normalized.head == Rows.sorted)
     assert(normalized.head == normalized(1))
   }
 
@@ -72,5 +51,33 @@ class TsLayoutSpec extends SparkSpec {
     val populated = streaming.EventStream.fileStream(spark, s"$Sf/events.parquet")
     assert(populated.isStreaming)
     assert(populated.schema("ts").dataType == TimestampType)
+  }
+}
+
+object TsLayoutSpec {
+
+  /** 2024-03-01T12:34:56.789012Z in micros since epoch. */
+  val instantUs = 1709296496789012L
+  val Rows = Seq(instantUs, instantUs + 1000000L, instantUs + 2500000L)
+
+  /** [[Rows]] written as the two `ts` layouts, one Spark-written parquet
+    * directory each: a raw nanos-since-epoch long (what the NANOS
+    * physical type surfaces as under spark.sql.legacy.parquet.nanosAsLong)
+    * and TIMESTAMP_NTZ (what MICROS isAdjustedToUTC=false surfaces as;
+    * session TZ is pinned UTC so the instant is preserved). */
+  def layoutDirs(spark: SparkSession): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val nanosDf = spark.createDataFrame(
+      Rows.map(us => Row(us * 1000L)).asJava,
+      StructType(Seq(StructField("ts", LongType))))
+    val ntzDf = spark.createDataFrame(
+      Rows.map(us => Row(java.time.LocalDateTime.ofEpochSecond(
+        us / 1000000L, (us % 1000000L).toInt * 1000, java.time.ZoneOffset.UTC))).asJava,
+      StructType(Seq(StructField("ts", TimestampNTZType))))
+    Seq(nanosDf, ntzDf).map { df =>
+      val dir = Files.createTempDirectory("graft-ts-layout").toString
+      df.coalesce(1).write.mode("overwrite").parquet(dir)
+      dir
+    }
   }
 }
