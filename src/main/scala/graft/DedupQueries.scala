@@ -1423,6 +1423,25 @@ object DedupQueries {
 
   // ------------------------------------------------- graph analytics
 
+  /** The near-dup pair graph's edge set `(i, j)`, `i < j`, as one
+    * lineage cut, and |E| — the count that materializes the cut. Every
+    * graph query below hangs off it, so the candidate-pair plan (the
+    * shingle self-join) runs once per query, in that count's job, and
+    * no round plan re-embeds it: the analyzer sees one LogicalRDD leaf
+    * where it saw the whole candidate-generation subtree, once per
+    * reference. |E| also sizes the query's cut frames ([[graphParts]])
+    * and becomes the cut's size estimate: the cut would otherwise carry
+    * the candidate-pair join's product estimate (5.4 GB for a kilobyte
+    * edge set at sf0.001), every round would plan a sort-merge join
+    * that re-shuffles the adjacency, and AQE would turn it into a
+    * broadcast at run time, in a number of jobs that varies with which
+    * stage finishes first. */
+  private[graft] def edgeSet(s: SparkSession, dir: String): (DataFrame, Long) = {
+    val e = cutLineage(ngramPairs(s, dir).select(col("i"), col("j")))
+    val m = e.count()
+    (org.apache.spark.sql.graftbridge.Bridge.withRowCount(e, m), m)
+  }
+
   /** Triangle enumeration over the near-dup pair graph — the graph
     * statistic past connected components (a triangle means three docs
     * pairwise-similar: a tight dup cluster, vs the loose chains CC also
@@ -1439,8 +1458,7 @@ object DedupQueries {
   val triangles: Q = Q(
     "graph_triangles",
     (s, dir) => {
-      val e = ngramPairs(s, dir).select(col("i"), col("j"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val (e, _) = edgeSet(s, dir)
       val deg = e.select(explode(array(col("i"), col("j"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
       val oriented = e
@@ -1514,8 +1532,8 @@ object DedupQueries {
   val kcore: Q = Q(
     "graph_kcore",
     (s, dir) => {
-      val init = cutLineage(ngramPairs(s, dir).select(col("i"), col("j")))
-      var nEdges = init.count()
+      val (init, m) = edgeSet(s, dir)
+      var nEdges = m
       val core = if (nEdges == 0) init else
         untilStable("graph_kcore", init, CoreRounds, uncutRounds = 0) { edges =>
           val deg = edges.select(explode(array(col("i"), col("j"))).as("v"))
@@ -1559,8 +1577,8 @@ object DedupQueries {
          |ORDER BY doc_id""".stripMargin
     })
 
-  /** Partitions for a graph query's cut frames, from a count the query
-    * already measured (|V| or |E|), not the session shuffle setting: a
+  /** Partitions for a graph query's cut frames, from the |E| that
+    * [[edgeSet]] already measured, not the session shuffle setting: a
     * |V|~10^3 dup-cluster graph spread over 32 cached partitions pays
     * 32-way task dispatch on every round's scans for no parallelism
     * gain (measured: graph_pagerank 7.3 s at 32 partitions vs 5.3 s at
@@ -1596,52 +1614,46 @@ object DedupQueries {
     * display division. Floor error per round is ≤ deg ulps of 10^-12 —
     * noise relative to rank gaps, identical noise in both engines.
     *
-    * Scale shape: the adjacency (2|E| rows) persists once; each round
-    * is one hash join ranks⋈adj (shuffle on node id, AQE-coalesced)
-    * plus one map-side-combining sum — O(rounds·|E|) total, the
-    * standard Pregel cost without a graph library. The round count is
-    * FIXED (oracle-pinned), and each round consumes the previous ranks
-    * frame exactly once, so the whole iteration chains lazily into one
-    * linear-size plan / one job — no per-round materialization needed
-    * (contrast [[starLabels]]/[[kcore]], whose convergence tests force
-    * a count per round). Teleport and init use integer div by |V|
-    * computed ONCE driver-side (Spark) / in a 1-row CTE (oracle) —
-    * same floor arithmetic, same values. */
+    * Scale shape: the adjacency (2|E| rows, degree on every row) is
+    * one lineage cut over [[edgeSet]], materialized by the |V| count;
+    * each round is one join ranks⋈adj (the small side broadcasts at
+    * dup-graph sizes) plus one map-side-combining sum — one exchange
+    * per round, O(rounds·|E|) total, the standard Pregel cost without
+    * a graph library. The round count is FIXED (oracle-pinned), and
+    * each round consumes the previous ranks frame exactly once, so the
+    * whole iteration chains lazily into one linear-size plan / one job
+    * — no per-round materialization needed (contrast
+    * [[starLabels]]/[[kcore]], whose convergence tests force a count
+    * per round). Teleport and init use integer div by |V| computed
+    * ONCE driver-side (Spark) / in a 1-row CTE (oracle) — same floor
+    * arithmetic, same values. */
   val pagerank: Q = Q(
     "graph_pagerank",
     (s, dir) => {
-      val e = ngramPairs(s, dir).select(col("i"), col("j"))
-      val adj = e.select(col("i").as("src"), col("j").as("dst"))
-        .unionAll(e.select(col("j").as("src"), col("i").as("dst")))
+      val (e, m) = edgeSet(s, dir)
       // Degree is loop-invariant, so it rides ON the adjacency: one
-      // (src, dst, d) frame persists and each round is a single join +
-      // aggregate instead of adj⋈ranks⋈deg (8 joins saved over the
-      // fixed rounds). The count-distinct-src for |V| comes from the
-      // same window pass.
+      // (src, dst, d) cut and each round is a single join + aggregate
+      // instead of adj⋈ranks⋈deg. The window runs over the
+      // repartitioned adjacency, whose partitioning it already needs:
+      // one exchange builds the cut.
+      //
+      // Each PageRank round reads the previous ranks frame exactly
+      // ONCE, so the 8-round chain is a linear-size lazy plan and the
+      // whole iteration is one job. The chain hangs off LINEAGE-CUT
+      // leaves: referencing an uncut adjacency re-embeds the whole
+      // candidate-generation subtree once per round in the analyzed
+      // plan, and Catalyst re-optimizing that tree cost more than a
+      // per-round materialization (8.4 s vs 6.5 s at sf0.1). The |V|
+      // count below materializes the lazy cut before the chain reads it.
       val bys = org.apache.spark.sql.expressions.Window.partitionBy(col("src"))
-      val adjd = adj.withColumn("d", count(lit(1)).over(bys))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = adjd.select(col("src")).distinct().count()
+      val adjCut = cutLineage(
+        e.select(col("i").as("src"), col("j").as("dst"))
+          .unionAll(e.select(col("j").as("src"), col("i").as("dst")))
+          .repartition(graphParts(s, m), col("src"))
+          .withColumn("d", count(lit(1)).over(bys)))
+      val n = adjCut.select(col("src")).distinct().count()
       val init = PrScale / n
       val tele = (PrScale * 15L) / (100L * n)
-      // Unlike k-core (each stage reads its predecessor 3x, so a lazy
-      // unroll is exponential), each PageRank round reads the previous
-      // ranks frame exactly ONCE — the 8-round chain is a linear-size
-      // lazy plan, so the whole iteration is one Spark job instead of 8
-      // materialize/count/unpersist round trips. The chain must hang
-      // off LINEAGE-CUT leaves, though: referencing the persisted
-      // frames directly re-embeds the whole candidate-generation
-      // subtree 8x (16x for deg) in the analyzed plan, and Catalyst
-      // re-optimizing that tree cost more than the old per-round
-      // materialization (8.4 s vs 6.5 s at sf0.1); over LogicalRDD
-      // leaves reading the warm caches it plans in milliseconds.
-      // lazy cut (r21): the terminal job's first scan (the init
-      // distinct below) materializes the checkpoint and the old
-      // separate checkpoint job folds into the chain job. Later scans
-      // usually queue behind the previous round's broadcast, but AQE
-      // may run two leaf stages over the cut at once; then both
-      // compute it — duplicated work, same result (see cutLineage).
-      val adjCut = cutLineage(adjd.repartition(graphParts(s, n), col("src")))
       val ranks0 = adjCut.select(col("src").as("v")).distinct()
         .select(col("v"), lit(init).as("r"))
       val ranks = (1 to PrRounds).foldLeft(ranks0) { (ranks, _) =>
@@ -1701,16 +1713,18 @@ object DedupQueries {
     * dedup reading is "which docs corroborate EACH OTHER", a finer
     * keeper grouping than reachability.
     *
-    * Scale shape: same skeleton as [[pagerank]] — adjacency persists
-    * once (partitions derived from measured |V|), each round is one
-    * hash join + one (node, label)-count aggregate + one per-node
-    * argmax, all shuffling on the node id; the fixed rounds chain
-    * lazily into ONE job over lineage-cut leaves (each round reads the
-    * previous labels exactly once). O(rounds·|E|) total. */
+    * Scale shape: same skeleton as [[pagerank]] — the adjacency is one
+    * lineage cut over [[edgeSet]] (partitions from |E|), each round is
+    * one join plus ONE per-node aggregate ([[lpaRound]]), shuffling on
+    * the node id once; the fixed rounds chain lazily into ONE job over
+    * lineage-cut leaves (each round reads the previous labels exactly
+    * once). O(rounds·|E|) total. */
   val labelPropagation: Q = Q(
     "graph_label_prop",
-    (s, dir) => lpaLabels(s, dir)
-      .select(col("v").as("doc_id"), col("lbl").as("community")),
+    (s, dir) => {
+      val (e, m) = edgeSet(s, dir)
+      lpaLabels(s, e, m).select(col("v").as("doc_id"), col("lbl").as("community"))
+    },
     Some(
       s"""WITH $ddbLpaChain
          |SELECT v AS doc_id, lbl AS community
@@ -1719,28 +1733,29 @@ object DedupQueries {
 
   /** The LPA kernel behind [[labelPropagation]], exposed for
     * [[modularity]]: per-node (v, lbl) after [[LpRounds]] majority
-    * rounds over the lineage-cut adjacency. */
-  private def lpaLabels(s: SparkSession, dir: String): DataFrame = {
-    val e = ngramPairs(s, dir).select(col("i"), col("j"))
-    val adj = e.select(col("i").as("src"), col("j").as("dst"))
-      .unionAll(e.select(col("j").as("src"), col("i").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = adj.select(col("src")).distinct().count()
+    * rounds over the lineage-cut adjacency of [[edgeSet]]'s `edges`,
+    * |E| = `m`. */
+  private def lpaLabels(s: SparkSession, edges: DataFrame, m: Long): DataFrame = {
     // lazy cut (r21) — same cost condition as pagerank's (cutLineage)
-    val adjCut = cutLineage(adj.repartition(graphParts(s, n), col("src")))
+    val adjCut = cutLineage(
+      edges.select(col("i").as("src"), col("j").as("dst"))
+        .unionAll(edges.select(col("j").as("src"), col("i").as("dst")))
+        .repartition(graphParts(s, m), col("src")))
     val labels0 = adjCut.select(col("src").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
-    (1 to LpRounds).foldLeft(labels0) { (labels, _) =>
-      adjCut
-        .join(labels.withColumnRenamed("v", "dst"), Seq("dst"))
-        .groupBy(col("src"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .groupBy(col("src"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("tb"),
-          col("lbl").as("l"))).as("m"))
-        .select(col("src").as("v"), col("m.l").as("lbl"))
-    }
+    (1 to LpRounds).foldLeft(labels0)((labels, _) => lpaRound(adjCut, labels))
   }
+
+  /** One synchronous LPA round over adjacency `adj(src, dst)`: each node
+    * takes the label most frequent among its neighbors, the SMALLEST
+    * label among equally frequent ones — deterministic `mode` returns
+    * the lowest, which is the oracle's `count DESC, lbl ASC`. One
+    * aggregate, so one exchange on the node id. */
+  private[graft] def lpaRound(adj: DataFrame, labels: DataFrame): DataFrame =
+    adj.join(labels.withColumnRenamed("v", "dst"), Seq("dst"))
+      .groupBy(col("src"))
+      .agg(mode(col("lbl"), deterministic = true).as("lbl"))
+      .select(col("src").as("v"), col("lbl"))
 
   /** Shared oracle CTE chain producing adj, e0 and the LPA labels
     * l[[LpRounds]] — the single source for [[labelPropagation]]'s and
@@ -1780,10 +1795,8 @@ object DedupQueries {
   val modularity: Q = Q(
     "graph_modularity",
     (s, dir) => {
-      val e = ngramPairs(s, dir).select(col("i"), col("j"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val m = e.count()
-      val labels = lpaLabels(s, dir)
+      val (e, m) = edgeSet(s, dir)
+      val labels = lpaLabels(s, e, m)
         .persist(StorageLevel.MEMORY_AND_DISK)
       val deg = e.select(explode(array(col("i"), col("j"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
@@ -1997,7 +2010,7 @@ object DedupQueries {
 
   /** BFS rounds (fixed — oracle-pinned like [[PrRounds]]) and seed
     * thinning modulus. */
-  private val BfsRounds = 4
+  private[graft] val BfsRounds = 4
   private val BfsSeedMod = 50
 
   /** Multi-source BFS over the near-dup graph — "contamination blast
@@ -2008,54 +2021,38 @@ object DedupQueries {
     * transitive contamination that pairwise decontamination misses.
     *
     * Scale shape: the classic Pregel frontier relaxation without a
-    * graph library — dist_r = min(dist_{r-1}, hop+1 over edges from
-    * dist_{r-1}), each round ONE hash join against the persisted
-    * adjacency plus one map-side-combining MIN — O(rounds·|E|), the
-    * same LINEAGE-CUT skeleton as [[pagerank]]: the adjacency and
-    * seed frames enter the loop as LogicalRDD leaves over their warm
-    * caches. A BFS round reads its predecessor TWICE (carry ∪
-    * expand), so the depth-4 lazy chain holds ≤2⁴ copies of those
-    * leaves — cheap, like [[starLabels]]' min-label loop — but over
-    * UNCUT inputs the same chain re-embeds the whole
-    * candidate-generation subtree per reference and Catalyst
-    * re-analyzes it every round: measured 15.9 s uncut and 14.2 s
-    * with per-round persists (no help — the ANALYZED tree still
-    * grows; the cut is what matters) vs 7.8 s cut, at sf0.1, reps=3
-    * medians — pure analyzer/cache-canonicalization cost on a graph
-    * whose data fits in kilobytes. [[graphParts]] sizes the frames
-    * from |E|, the count this query already takes (pagerank and LPA
-    * pass |V|, which here would cost a distinct-count job). Distances
-    * are small integers — nothing floats. Isolated seeds surface at hop
-    * 0 (the takedown list itself is part of the report). */
+    * graph library — dist_r(v) = min over adjacency rows (u, v, w) of
+    * dist_{r-1}(u) + w ([[bfsRound]]), each round ONE join against the
+    * adjacency plus one map-side-combining MIN — O(rounds·|E|). The
+    * adjacency carries weight-1 edges both ways plus a weight-0
+    * self-loop for every node and seed ([[bfsAdjacency]]), so the one
+    * join yields both the carried distances and the expanded frontier:
+    * the oracle's carry ∪ expand, with each round reading its
+    * predecessor ONCE (a carry ∪ expand round reads it twice, which
+    * doubles the lazy chain per round). The adjacency and seed frames
+    * enter the loop as lineage cuts ([[edgeSet]]'s skeleton): over
+    * UNCUT inputs the chain re-embeds the whole candidate-generation
+    * subtree per reference and Catalyst re-analyzes it every round
+    * (measured 15.9 s uncut vs 7.8 s cut at sf0.1, reps=3 medians —
+    * analyzer cost on a graph whose data fits in kilobytes).
+    * [[graphParts]] sizes the frames from |E|. Distances are small
+    * integers — nothing floats. Isolated seeds surface at hop 0 (the
+    * takedown list itself is part of the report). */
   val bfsReach: Q = Q(
     "graph_bfs_reach",
     (s, dir) => {
-      val e = ngramPairs(s, dir).select(col("i"), col("j"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val gParts = graphParts(s, e.count())
-      // the checkpoint is the store; a persist UNDER the cut would be
-      // materialized once during checkpointing and never read again.
-      // Lazy cuts (r21): the terminal job materializes both leaves —
-      // seeds first (inside round 1's broadcast build), then adj in
-      // round 1's probe stage — each normally read by one stage until
-      // materialized; a concurrent second reader would duplicate the
-      // work, not change the result (see cutLineage).
-      val adj = cutLineage(
-        e.select(col("i").as("src"), col("j").as("dst"))
-          .unionAll(e.select(col("j").as("src"), col("i").as("dst")))
-          .repartition(gParts, col("src")))
-      val seeds = cutLineage(
-        corpus(s, dir)
-          .filter(col("doc_id") % BfsSeedMod === 0)
+      val (e, m) = edgeSet(s, dir)
+      val gParts = graphParts(s, m)
+      val d0 = cutLineage(
+        corpus(s, dir).filter(col("doc_id") % BfsSeedMod === 0)
           .select(col("doc_id").as("v"), lit(0L).as("hop"))
           .repartition(gParts, col("v")))
-      val dist = (1 to BfsRounds).foldLeft(seeds) { (d, _) =>
-        d.unionAll(
-          d.join(adj, col("v") === col("src"))
-            .select(col("dst").as("v"), (col("hop") + 1).as("hop")))
-          .groupBy(col("v")).agg(min(col("hop")).as("hop"))
-      }
-      dist.select(col("v").as("doc_id"), col("hop"))
+      // the seeds' self-loops come from the seed cut, so the corpus is
+      // scanned once for seeds: the adjacency's cut computes d0 while
+      // it runs its shuffle stages, and the chain reads both warm
+      val adj = cutLineage(bfsAdjacency(e, d0).repartition(gParts, col("src")))
+      (1 to BfsRounds).foldLeft(d0)((d, _) => bfsRound(d, adj))
+        .select(col("v").as("doc_id"), col("hop"))
     },
     Some {
       // MATERIALIZED per round for the same reason as kcore's oracle:
@@ -2081,6 +2078,28 @@ object DedupQueries {
          |SELECT v AS doc_id, hop FROM d$BfsRounds
          |ORDER BY doc_id""".stripMargin
     })
+
+  /** [[bfsReach]]'s weighted adjacency `(src, dst, w)` over edge set
+    * `edges(i, j)`: every edge both ways at weight 1, and one weight-0
+    * self-loop per node of the graph or of `seeds(v)`, so that a BFS
+    * round keeps every distance it already holds. */
+  private[graft] def bfsAdjacency(edges: DataFrame, seeds: DataFrame): DataFrame = {
+    val nodes = edges.select(col("i").as("v"))
+      .unionAll(edges.select(col("j").as("v")))
+      .unionAll(seeds.select(col("v")))
+      .distinct()
+    edges.select(col("i").as("src"), col("j").as("dst"), lit(1L).as("w"))
+      .unionAll(edges.select(col("j").as("src"), col("i").as("dst"), lit(1L).as("w")))
+      .unionAll(nodes.select(col("v").as("src"), col("v").as("dst"), lit(0L).as("w")))
+  }
+
+  /** One BFS round: distances `d(v, hop)` relaxed over [[bfsAdjacency]]
+    * `adj` — d reads once, one MIN aggregate on the node id. */
+  private[graft] def bfsRound(d: DataFrame, adj: DataFrame): DataFrame =
+    d.join(adj, col("v") === col("src"))
+      .groupBy(col("dst"))
+      .agg(min(col("hop") + col("w")).as("hop"))
+      .select(col("dst").as("v"), col("hop"))
 
   def all: Seq[Q] = Seq(
     exact, dupRateBySource, ngramJaccard, prefixFilter, clusters, clustersStar, keepBest,

@@ -20,6 +20,18 @@ object Session {
     // count(*)-style parameter derivations (LSH planes, IVF stride)
     // become parquet-footer reads instead of full count jobs
     "spark.sql.parquet.aggregatePushDown" -> "true",
+    // Parquet TIMESTAMP(NANOS) columns (one of the `events` layouts)
+    // read as nanos longs, which Sources.normalizeTs converts. The
+    // reader reads this conf when a scan executes, not when its frame is
+    // built, so it must hold for the whole session.
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    // Static: Spark's generated-class cache (default 100 entries). The
+    // four graph loops and eight reference loads compile ~310 distinct
+    // classes (the driver and the executor threads key a class under
+    // their own classloader), so at 100 every warm run recompiled ~330
+    // of them; at 1000 a warm run compiles none, at 500 a few
+    // (graft.tools.Profile at sf0.01 on 4 cores; PERF.md).
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
     "spark.ui.enabled" -> "false",
     // Even with the UI off, SQLAppStatusListener retains the last
     // 1000 SQL executions — each holding the FULL physical-plan

@@ -141,17 +141,16 @@ object Sources {
 
   /** `events` loader, adaptive to the two `ts` layouts the driver has
     * shipped: parquet TIMESTAMP(NANOS) (surfaced as a nanos long under
-    * the legacy reader conf — converted with integral DIV, not double
+    * the legacy reader conf, which [[graft.Session]] ships for the whole
+    * session — converted with integral DIV, not double
     * division: ~1.7e18 nanos exceeds a double's 2^53 exact range) and
     * plain TIMESTAMP(MICROS) with isAdjustedToUTC=false (surfaced as
     * TIMESTAMP_NTZ — cast to the session type; the session timezone is
     * pinned UTC, so the instant is unchanged and downstream code plus
     * the DuckDB oracle, which always read the parquet timestamp
     * natively, see identical values either way). */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
     normalizeTs(table(spark, sfDir, "events"))
-  }
 
   /** Normalize an events frame's `ts` column to the session TimestampType
     * regardless of which raw layout it was read from (see [[events]]).

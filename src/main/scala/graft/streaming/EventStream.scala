@@ -48,7 +48,6 @@ object EventStream {
     * directory (and start a new stream over it) — later files with a
     * different physical type under the frozen schema fail the read. */
   def fileStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val layout =
       try graft.etl.Sources.parquet(spark, dir).schema
       catch { case _: org.apache.spark.sql.AnalysisException => rawSchema }

@@ -15,7 +15,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * `main` is the per-query dispatch profile under the shipped session:
   * wall seconds, Spark job count, completed-stage count and executor
-  * task ms for each named registry query, `reps` times each.
+  * task ms for each named registry query, `reps` times each, followed
+  * by the run's full record (GC, JIT, codegen compiles, heap).
   * Deterministic job/stage counts are the evidence for changes that do
   * not show in the physical plan (the r21 fold of the eager-checkpoint
   * job into the per-round convergence count left the terminal plan
@@ -208,7 +209,7 @@ object Profile {
     val reps = if (args.length > 1) args(1).toInt else 3
     val spark = graft.Session.build(cpus.toInt)
     warmUp(spark)
-    run(spark, sfDir, names, reps).foreach(r => println(r.line))
+    run(spark, sfDir, names, reps).foreach(r => println(s"${r.line}  ${r.json}"))
     spark.stop()
   }
 }

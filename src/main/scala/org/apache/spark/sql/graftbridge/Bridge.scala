@@ -32,6 +32,24 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`, a frame over one LogicalRDD leaf (a lineage cut), with the
+    * leaf's size estimate set from `rows`, a count of that leaf: a cut
+    * otherwise carries the optimizer's estimate of the plan it cut,
+    * which for a join is the product of its inputs' sizes (gigabytes
+    * for a kilobyte edge set), and every join above it plans for that
+    * size. Any other frame comes back unchanged. */
+  def withRowCount(df: org.apache.spark.sql.DataFrame, rows: Long)
+      : org.apache.spark.sql.DataFrame = logicalPlan(df) match {
+    case r: org.apache.spark.sql.execution.LogicalRDD =>
+      import org.apache.spark.sql.catalyst.plans.logical.Statistics
+      import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      val stats = Statistics(EstimationUtils.getSizePerRow(r.output) * rows, Some(BigInt(rows)))
+      dataFrame(df.sparkSession, r.copy()(
+        df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+        Some(stats), Some(r.constraints)))
+    case _ => df
+  }
+
   /** Block until the listener bus has delivered every queued event —
     * lets the registry runner (graft.tools.Profile.Runner) read its
     * listener counts race-free right after a run returns (events are

@@ -229,11 +229,12 @@ class PlanShapeSpec extends SparkSpec {
 
   test("pagerank: rank frames stay small — adjacency joins are the only exchanges") {
     val p = plan("graph_pagerank")
-    // the 8 rounds chain lazily into ONE plan over the persisted
-    // adjacency/degree frames; the rank iteration itself is join + agg
-    // only. The sole Window operators in the rendered plan are the
-    // shingle df-cap inside the cached candidate-gen subtree (printed
-    // by InMemoryRelation), never a rank-frame window.
+    // the 8 rounds chain lazily into ONE plan over the lineage-cut
+    // adjacency (degree rides on it); the rank iteration itself is
+    // join + agg only. The degree window and the candidate-gen
+    // subtree's shingle df-cap window sit behind the cuts, so the only
+    // Window a rendered plan may show is a df-cap one, never a
+    // rank-frame window.
     val windows = p.linesIterator.filter(_.contains("Window [")).toSeq
     assert(windows.forall(_.contains("AS df#")), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

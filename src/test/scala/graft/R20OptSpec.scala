@@ -11,10 +11,13 @@ import org.apache.spark.sql.functions._
   * input is already split at least half as wide as the session.
   *
   * O2 — the localCheckpoint lineage cut must (a) preserve the
-  * rows/schema it cuts and (b) leave the LogicalRDD leaf with an
-  * HONEST (small) size estimate instead of the defaultSizeInBytes
+  * rows/schema it cuts and (b) leave the LogicalRDD leaf with the
+  * size estimate of the plan it cut instead of the defaultSizeInBytes
   * sentinel, so the per-round graph-loop joins stay size-driven and
-  * the small side broadcasts (the r20 SMJ→BHJ plan flips). The
+  * the small side broadcasts (the r20 SMJ→BHJ plan flips). That
+  * estimate is only as honest as the cut plan's: over a join it is
+  * the product of the inputs' sizes, which is why
+  * [[DedupQueries.edgeSet]] replaces it with one from its count. The
   * checkpoint does NOT preserve outputPartitioning under AQE — a
   * same-key aggregate above the cut still plans its exchange; that
   * negative result is pinned in the test body so no future round

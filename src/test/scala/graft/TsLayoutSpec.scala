@@ -15,6 +15,20 @@ import org.apache.spark.sql.types._
 class TsLayoutSpec extends SparkSpec {
   import TsLayoutSpec._
 
+  test("Sources.events and EventStream.fileStream leave the session conf unchanged") {
+    // the nanos reader conf ships in Session.confs; a loader that set it
+    // would change it for every later query of the session
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    val prior = spark.conf.get(nanos)
+    spark.conf.set(nanos, "false") // the sf0.001 events are micros: readable either way
+    try {
+      val before = spark.conf.getAll
+      assert(etl.Sources.events(spark, Sf).count() > 0)
+      assert(streaming.EventStream.fileStream(spark, s"$Sf/events.parquet").isStreaming)
+      assert(spark.conf.getAll == before)
+    } finally spark.conf.set(nanos, prior)
+  }
+
   test("nanos-long and TIMESTAMP_NTZ parquet layouts normalize to the same instants") {
     val dirs = layoutDirs(spark)
     val normalized = dirs.map { d =>
